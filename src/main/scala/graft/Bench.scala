@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.Json
+
 /** Benchmark main — runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line the driver records as BENCH_r{N}.json.
   *
@@ -49,13 +51,6 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
     // Untimed warm-up: JIT/codegen/parquet-footer caches would otherwise
     // all land on whichever query happens to sort first. Best-effort —
     // a missing fixture must not kill the per-query error reporting.
@@ -102,8 +97,8 @@ object Bench {
         f"[bench] $name median=$median%.3f runs=${times.map(t => f"$t%.3f").mkString(",")}")
       name -> median
     }
-    val qs = results.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => s"${Json.quote(k)}:$v" }.mkString("{", ",", "}")
+    val errJson = errors.map { case (k, v) => s"${Json.quote(k)}:${Json.quote(v)}" }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // per-query max/min run spread: with median-of-3, transient box
     // contention shows up as one outlier run — a high spread on an
@@ -112,10 +107,10 @@ object Bench {
     // this to annotate over-gate rows.
     val spreadJson = allRuns.collect {
       case (k, ts) if ts.nonEmpty && ts.min > 0 =>
-        s"${jstr(k)}:${f"${ts.max / ts.min}%.2f"}"
+        s"${Json.quote(k)}:${f"${ts.max / ts.min}%.2f"}"
     }.mkString("{", ",", "}")
     val loadEnd = loadavg()
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"n_failed":${errors.size},"sf":${jstr(sfDir)},"runs_per_query":$nRuns,"n_queries":${results.size},"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"spread":$spreadJson}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"n_failed":${errors.size},"sf":${Json.quote(sfDir)},"runs_per_query":$nRuns,"n_queries":${results.size},"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"spread":$spreadJson}"""
     println(line)
     // Full artifact to a repo-tracked file: the driver's BENCH_r{N}.json
     // capture truncates to the tail ~56 queries, so gate comparisons

@@ -5,6 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 
+import graft.util.Json
+
 /** Incremental-source bookmark — reference A22: Glue job bookmarks track
   * processed input per `transformation_ctx` so re-runs skip old files
   * (`glue/glue_etl_framework.py:101,115,186,227,438`). Glue keeps that
@@ -58,19 +60,12 @@ class BookmarkStore(spark: SparkSession, statePath: String,
   def load(): Map[String, SourceMark] = {
     val p = new org.apache.hadoop.fs.Path(statePath)
     val f = fs(p)
-    if (!f.exists(p)) Map.empty
-    else {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      parse(text)
-    }
+    if (!f.exists(p)) Map.empty else parse(Json.readFile(f, p))
   }
 
   def save(marks: Map[String, SourceMark]): Unit = {
     val p = new org.apache.hadoop.fs.Path(statePath)
-    val f = fs(p)
-    val out = f.create(p, true)
-    try out.write(render(marks).getBytes("UTF-8")) finally out.close()
+    Json.writeFile(fs(p), p, render(marks))
   }
 
   /** True when any path component BELOW `root` is hidden (`_`/`.`
@@ -152,15 +147,15 @@ class BookmarkStore(spark: SparkSession, statePath: String,
       save(marks + (plan.source -> SourceMark(committed, seen)))
     }
 
-  // JSON codec via snakeyaml (YAML ⊇ JSON flow style — same parser the
-  // config layer uses). Legacy flat {"source": millis} files load as a
-  // bare watermark with an empty seen-set.
+  // Written with graft's JSON string escape, read via snakeyaml (YAML ⊇
+  // JSON flow style — same parser the config layer uses; it decodes the
+  // \uXXXX escapes). Legacy flat {"source": millis} files load as a bare
+  // watermark with an empty seen-set.
   private def render(m: Map[String, SourceMark]): String = {
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     m.toSeq.sortBy(_._1).map { case (src, mark) =>
       val seen = mark.seen.toSeq.sorted
-        .map { case (p, t) => s"${jstr(p)}: $t" }.mkString("{", ", ", "}")
-      s"${jstr(src)}: {\"watermark\": ${mark.watermark}, \"seen\": $seen}"
+        .map { case (p, t) => s"${Json.quote(p)}: $t" }.mkString("{", ", ", "}")
+      s"${Json.quote(src)}: {\"watermark\": ${mark.watermark}, \"seen\": $seen}"
     }.mkString("{", ", ", "}")
   }
 

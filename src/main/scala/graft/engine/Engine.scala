@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.config._
 import graft.sources.Sources
 import graft.sinks.Sinks
+import graft.util.Json
 
 /** Orchestration core — the reference's whole query lifecycle
   * (`glue/glue_etl_framework.py:136-275`, SURVEY.md §3) re-expressed as
@@ -202,14 +203,10 @@ object Engine {
         out.target match {
           case TargetSpec.File(location) =>
             val dir = new org.apache.hadoop.fs.Path(location)
-            val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val json = metrics.map { case (k, v) =>
-              "\"" + k.replace("\"", "\\\"") + "\":" + String.valueOf(v)
-            }.mkString("{", ",", "}")
-            val os = fs.create(
-              new org.apache.hadoop.fs.Path(dir, "_graft_metrics.json"), true)
-            try os.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally os.close()
+            Json.writeFile(
+              dir.getFileSystem(spark.sparkContext.hadoopConfiguration),
+              new org.apache.hadoop.fs.Path(dir, "_graft_metrics.json"),
+              Json.fields(metrics))
           case _ => ()
         }
       }

@@ -1,9 +1,12 @@
 package graft.log
 
+import graft.util.Json
+
 /** Structured JSON logging — reference A21: the framework logs one JSON
   * object per event with timestamp/level/location plus job-context fields
-  * (`glue/glue_etl_framework.py:311-359`). JVM analog: a tiny zero-dep
-  * emitter with a process-wide context map (the MDC role), so every engine
+  * (`glue/glue_etl_framework.py:311-359`). JVM analog: a tiny emitter
+  * (graft's one JSON string escape, [[graft.util.Json.quote]]) with a
+  * process-wide context map (the MDC role), so every engine
   * stage logs `{"ts":..., "level":..., "msg":..., "job":..., "pipeline":...}`
   * on one line — machine-parseable by any log shipper.
   *
@@ -29,20 +32,10 @@ object Log {
                           fields: Seq[(String, String)], ts: String): String = {
     val kv = (Seq("ts" -> ts, "level" -> level, "msg" -> msg) ++
       context.toSeq.sortBy(_._1) ++ fields)
-    kv.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+    kv.map { case (k, v) => s"${Json.quote(k)}:${Json.quote(v)}" }.mkString("{", ",", "}")
   }
 
   private def emit(level: String, msg: String, fields: Seq[(String, String)]): Unit =
     if (enabled)
       System.err.println(render(level, msg, fields, java.time.Instant.now().toString))
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

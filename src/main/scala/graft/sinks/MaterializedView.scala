@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.Path
 
+import graft.util.Json
+
 /** Version-aware MATERIALIZED VIEW over versioned-table sources: the MV
   * is itself a versioned table, plus a state record of the source
   * snapshot versions it was computed FROM. A refresh first compares the
@@ -42,17 +44,10 @@ object MaterializedView {
     val p = statePath(root)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val text = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-        out.toString("UTF-8")
-      } finally in.close()
-      for {
-        fp <- """"fingerprint":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(text)
-          .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-        v <- """"mv_version":(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
-      } yield (fp, v)
+      val text = Json.readFile(fs, p)
+      // a state torn by a crash mid-write reads as no state: recompute
+      try Some(Json.read[Json.MvState](text)).map(s => (s.fingerprint, s.mv_version))
+      catch { case _: java.io.IOException => None }
     }
   }
 
@@ -90,18 +85,9 @@ object MaterializedView {
                   fp: String, version: Long): Unit = {
     val root = new Path(location)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val json = s"""{"fingerprint":${jstr(fp)},"mv_version":$version,""" +
-      s""""ts":${System.currentTimeMillis()}}"""
-    val os = fs.create(statePath(root), true)
-    try os.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
+    Json.writeFile(fs, statePath(root), Json.write(
+      Json.MvState(fp, version, System.currentTimeMillis())))
   }
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   /** INCREMENTAL VIEW MAINTENANCE for ADDITIVE grouped views over ONE
     * append-only versioned source — the IVM fast path: when every commit

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.config.{OutputTable, Refresh, TargetSpec}
+import graft.util.Json
 
 /** Output-table writer — reference A8–A16
   * (`glue/glue_etl_framework.py:190-275`), SURVEY.md §7 module 4.
@@ -161,12 +162,8 @@ object Sinks {
     * a concurrently-purged (missing) pointer. */
   private def genOf(fs: org.apache.hadoop.fs.FileSystem,
                     p: org.apache.hadoop.fs.Path): Option[String] =
-    try {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      "\"gen\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(text).map(_.group(1))
-    } catch { case _: java.io.FileNotFoundException => None }
+    try Some(Json.load[Json.Pointer](fs, p).gen)
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** Latest published (version, generation-dir name), if any. A purge
     * can delete the listed max pointer between LIST and OPEN — that
@@ -282,8 +279,7 @@ object Sinks {
   private def publishPointer(fs: org.apache.hadoop.fs.FileSystem,
       target: org.apache.hadoop.fs.Path, genName: String, format: String,
       keep: Int): Long = {
-    def j(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val content = s"""{"gen":${j(genName)},"format":${j(format)}}"""
+    val content = Json.write(Json.Pointer(genName, format))
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val genPath = new org.apache.hadoop.fs.Path(genRoot(target), genName)
     var attempt = 0
@@ -417,28 +413,22 @@ object Sinks {
                             out: OutputTable): Unit = {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = dir.toUri.getPath.stripSuffix("/")
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val files = scala.collection.mutable.ArrayBuffer.empty[Json.FileEntry]
     val it = fs.listFiles(dir, true)
     while (it.hasNext) {
       val st = it.next()
       val name = st.getPath.getName
       if (st.isFile && !name.startsWith("_") && !name.startsWith(".")) {
-        files += ((st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/"), st.getLen))
+        files += Json.FileEntry(st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/"), st.getLen)
       }
     }
     val rows = spark.read.format(out.format)
       .options(graft.sources.Sources.mapOptions(out.options))
       .load(dir.toString).count()
-    def j(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val sorted = files.sortBy(_._1)
-    val fileJson = sorted.map { case (n, b) => s"""{"name":${j(n)},"bytes":$b}""" }
-      .mkString("[", ",", "]")
-    val json = s"""{"table":${j(out.name)},"format":${j(out.format)},""" +
-      s""""row_count":$rows,"n_files":${sorted.size},""" +
-      s""""total_bytes":${sorted.map(_._2).sum},"files":$fileJson}"""
-    val os = fs.create(new org.apache.hadoop.fs.Path(dir, "_graft_manifest.json"), true)
-    try os.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
+    val sorted = files.toSeq.sortBy(_.name)
+    Json.writeFile(fs, new org.apache.hadoop.fs.Path(dir, "_graft_manifest.json"),
+      Json.write(Json.PublishManifest(out.name, out.format, rows, sorted.size,
+        sorted.map(_.bytes).sum, sorted)))
   }
 
   /** Returns the `observe_cols` audit metrics collected during the write

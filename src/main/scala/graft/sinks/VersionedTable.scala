@@ -2,6 +2,9 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.json4s.{JDecimal, JInt, JNothing, JNull, JString, JValue}
+
+import graft.util.Json
 
 /** Versioned-manifest table — the minimal TABLE FORMAT the A15/A16
   * contracts were missing (SURVEY "what's missing" #2): multi-writer
@@ -89,6 +92,8 @@ object VersionedTable {
 
   private def logDir(root: Path) = new Path(root, "_graft_log")
   private def dataDir(root: Path) = new Path(root, "data")
+  private def dataPaths(root: Path, names: Seq[String]): Seq[String] =
+    names.map(n => new Path(dataDir(root), n).toString)
   private def manifestPath(root: Path, v: Long) =
     new Path(logDir(root), f"v$v%05d.json")
 
@@ -137,39 +142,35 @@ object VersionedTable {
     var acted = false
     markers.foreach { mn =>
       try {
-        val text = manifestTextAt(fs, new Path(logDir(root), mn))
-        val tmpName = manifestField(text, "tmp")
-        val vs = """"versions":\[([0-9, ]+)\]""".r.findFirstMatchIn(text)
-          .map(_.group(1).split(',').map(_.trim.toLong).toSet)
-        for (tmp <- tmpName; versions <- vs) {
-          versions.toSeq.sorted.foreach { v =>
-            val tmpPath = branchManifestPath(root, v, tmp)
-            if (fs.exists(tmpPath)) {
-              val content = manifestTextAt(fs, tmpPath)
-              // anything at this version under the real name is the old
-              // lineage (possibly version-colliding) — the marker decided
-              fs.delete(branchManifestPath(root, v, branch), false)
-              coordinatorImpl.publish(fs, logDir(root),
-                branchManifestPath(root, v, branch),
-                content.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-              fs.delete(tmpPath, false)
-            } // temp gone = already published (temp deletion follows publish)
-          }
-          // stale pre-rebase lineage outside the recorded set — swept
-          // from the ORIGINAL `names` snapshot, never a fresh listing:
-          // a manifest that appeared after our listing is a
-          // post-recovery commit by someone who already finished this
-          // recovery (their marker-delete precedes any new commit) and
-          // must survive the sweep
-          val suffix = s"@$branch.json"
-          names
-            .collect { case n if n.startsWith("v") && n.endsWith(suffix) =>
-              (n.stripPrefix("v").stripSuffix(suffix).toLong, n) }
-            .filterNot { case (v, _) => versions(v) }
-            .foreach { case (_, n) => fs.delete(new Path(logDir(root), n), false) }
-          fs.delete(new Path(logDir(root), mn), false)
-          acted = true
+        val marker = Json.load[Json.RebaseMarker](fs, new Path(logDir(root), mn))
+        val versions = marker.versions.toSet
+        marker.versions.sorted.foreach { v =>
+          val tmpPath = branchManifestPath(root, v, marker.tmp)
+          if (fs.exists(tmpPath)) {
+            val content = Json.readFile(fs, tmpPath)
+            // anything at this version under the real name is the old
+            // lineage (possibly version-colliding) — the marker decided
+            fs.delete(branchManifestPath(root, v, branch), false)
+            coordinatorImpl.publish(fs, logDir(root),
+              branchManifestPath(root, v, branch),
+              content.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+            fs.delete(tmpPath, false)
+          } // temp gone = already published (temp deletion follows publish)
         }
+        // stale pre-rebase lineage outside the recorded set — swept
+        // from the ORIGINAL `names` snapshot, never a fresh listing:
+        // a manifest that appeared after our listing is a
+        // post-recovery commit by someone who already finished this
+        // recovery (their marker-delete precedes any new commit) and
+        // must survive the sweep
+        val suffix = s"@$branch.json"
+        names
+          .collect { case n if n.startsWith("v") && n.endsWith(suffix) =>
+            (n.stripPrefix("v").stripSuffix(suffix).toLong, n) }
+          .filterNot { case (v, _) => versions(v) }
+          .foreach { case (_, n) => fs.delete(new Path(logDir(root), n), false) }
+        fs.delete(new Path(logDir(root), mn), false)
+        acted = true
       } catch { case _: java.io.IOException => () } // torn/contended: retry next read
     }
     // markerless temp debris: the rebase never decided — expire past TTL
@@ -213,12 +214,6 @@ object VersionedTable {
     }
   }
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Publish pre-rendered manifest text at `p` via the same temp-file +
     * rename-if-absent pattern as [[writeManifestCas]] — a crashed writer
     * can never expose a torn manifest. Throws if `p` already exists. */
@@ -229,24 +224,16 @@ object VersionedTable {
       throw new java.io.IOException(s"manifest '$p' already exists")
 
   private def writeManifestCas(fs: FileSystem, root: Path, v: Long,
-                               mode: String, files: Seq[(String, Long)],
+                               mode: String, files: Seq[Json.FileEntry],
                                txn: Option[(String, Long)],
                                statsFile: Option[String] = None,
                                dv: Option[(String, Long)] = None,
                                branch: Option[String] = None): Boolean = {
-    val fileJson = files.sortBy(_._1)
-      .map { case (n, b) => s"""{"name":${jstr(n)},"bytes":$b}""" }
-      .mkString("[", ",", "]")
-    val txnJson = txn.map { case (app, batch) =>
-      s""""txn_app":${jstr(app)},"txn_batch":$batch,""" }.getOrElse("")
-    val statsJson = statsFile.map(sf => s""""stats_file":${jstr(sf)},""").getOrElse("") +
-      dv.map { case (name, rows) =>
-        s""""dv_file":${jstr(name)},"dv_rows":$rows,""" }.getOrElse("")
     // commit wall clock: what as-of-TIMESTAMP reads resolve against
     // (informational ordering only — the version number is the truth)
-    val json = s"""{"version":$v,"ts":${System.currentTimeMillis()},""" +
-      s""""mode":${jstr(mode)},$txnJson$statsJson""" +
-      s""""n_files":${files.size},"files":$fileJson}"""
+    val manifest = Json.Manifest(v, Some(System.currentTimeMillis()), mode,
+      txn.map(_._1), txn.map(_._2), statsFile, dv.map(_._1), dv.map(_._2),
+      files.size, files.sortBy(_.name))
     val p = branch.fold(manifestPath(root, v))(branchManifestPath(root, v, _))
     // The publish primitive is PLUGGABLE ([[CommitCoordinator]]): the
     // default is write-complete-content-then-rename-if-absent
@@ -259,46 +246,27 @@ object VersionedTable {
     // would treat as a committed version (and whose empty file list the
     // next append would silently adopt as its base).
     coordinatorImpl.publish(fs, logDir(root), p,
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Json.write(manifest).getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  private def manifestTextAt(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-      out.toString("UTF-8")
-    } finally in.close()
+  private def manifestAt(fs: FileSystem, p: Path): Json.Manifest =
+    Json.load[Json.Manifest](fs, p)
+
+  private def manifestOf(fs: FileSystem, root: Path, v: Long): Json.Manifest =
+    manifestAt(fs, manifestPath(root, v))
+
+  /** [[manifestOf]] memoized for one operation: a committed main
+    * manifest never changes, so each is opened at most once per call. */
+  private def manifestReader(fs: FileSystem, root: Path): Long => Json.Manifest = {
+    val seen = scala.collection.mutable.Map.empty[Long, Json.Manifest]
+    v => seen.getOrElseUpdate(v, manifestOf(fs, root, v))
   }
-
-  private def manifestText(fs: FileSystem, root: Path, v: Long): String =
-    manifestTextAt(fs, manifestPath(root, v))
-
-  // the manifest is machine-written flat JSON; extract the file names
-  private def filesOfText(text: String): Seq[String] =
-    """"name":"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(text)
-      .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
-
-  private def readManifest(fs: FileSystem, root: Path, v: Long): Seq[String] =
-    filesOfText(manifestText(fs, root, v))
-
-  private def manifestField(text: String, key: String): Option[String] =
-    (""""""" + key + """":"((?:[^"\\]|\\.)*)"""").r.findFirstMatchIn(text)
-      .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
 
   // ------------------------------------------------------- deletion vectors
 
-  /** The version's deletion-vector sidecar (a parquet DIRECTORY under
-    * `_graft_log/`, columns `file: string, pos: long`) and its total
-    * row count — absent for versions with no deletes. */
-  private def dvOf(fs: FileSystem, root: Path, v: Long): Option[(String, Long)] = {
-    val text = manifestText(fs, root, v)
-    manifestField(text, "dv_file").map { name =>
-      (name, """"dv_rows":(\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong).getOrElse(0L))
-    }
-  }
-
+  /** A version's deletion vector: the manifest's `dv_file`, a parquet
+    * DIRECTORY under `_graft_log/` with columns `file: string, pos: long`
+    * (`dv_rows` is its row count; both absent with no deletes). */
   private def readDv(spark: SparkSession, root: Path, name: String): DataFrame =
     spark.read.parquet(new Path(logDir(root), name).toString)
 
@@ -343,62 +311,50 @@ object VersionedTable {
 
   /** One total order per kind, chosen so stats written at commit time and
     * predicate values supplied at read time compare exactly:
-    *  - numbers (int/long/float/double/decimal) -> decimal token
-    *  - timestamps -> epoch micros; dates -> epoch days (numeric tokens:
+    *  - numbers (int/long/float/double/decimal) -> decimal
+    *  - timestamps -> epoch micros; dates -> epoch days (numbers:
     *    java.sql.Timestamp.toString renders in the WRITER JVM's default
     *    time zone, so its string form is not comparable across writers —
     *    epoch numbers are exact and zone-free)
     *  - booleans -> 0/1
-    *  - strings (and anything else) -> JSON string, lexicographic
+    *  - strings (and anything else) -> string, lexicographic
     * A kind mismatch at prune time keeps the file (conservative). */
-  private[sinks] def canonToken(v: Any): String = v match {
-    case null => "null"
-    case b: Boolean => if (b) "1" else "0"
-    case n: Byte => n.toString
-    case n: Short => n.toString
-    case n: Int => n.toString
-    case n: Long => n.toString
-    case n: Float => BigDecimal(n.toDouble).bigDecimal.toPlainString
-    case n: Double => BigDecimal(n).bigDecimal.toPlainString
-    case n: java.math.BigDecimal => n.toPlainString
-    case n: BigDecimal => n.bigDecimal.toPlainString
+  private def canonValue(v: Any): JValue = v match {
+    case null => JNull
+    case b: Boolean => JInt(if (b) 1 else 0)
+    case n: Byte => JInt(n.toInt)
+    case n: Short => JInt(n.toInt)
+    case n: Int => JInt(n)
+    case n: Long => JInt(n)
+    case n: Float => JDecimal(BigDecimal(n.toDouble))
+    case n: Double => JDecimal(BigDecimal(n))
+    case n: java.math.BigDecimal => JDecimal(BigDecimal(n))
+    case n: BigDecimal => JDecimal(n)
     case t: java.sql.Timestamp => // floorDiv: exact for pre-epoch instants
-      (Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L).toString
+      JInt(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
     case t: java.time.Instant =>
-      (t.getEpochSecond * 1000000L + t.getNano / 1000L).toString
+      JInt(t.getEpochSecond * 1000000L + t.getNano / 1000L)
     case t: java.time.LocalDateTime =>
-      canonToken(java.time.Instant.from(t.atZone(java.time.ZoneOffset.UTC)))
-    case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
-    case d: java.time.LocalDate => d.toEpochDay.toString
-    case s => jstr(s.toString)
+      canonValue(java.time.Instant.from(t.atZone(java.time.ZoneOffset.UTC)))
+    case d: java.sql.Date => JInt(d.toLocalDate.toEpochDay)
+    case d: java.time.LocalDate => JInt(d.toEpochDay)
+    case s => JString(s.toString)
   }
 
-  private def unjstr(tok: String): String = {
-    val body = tok.substring(1, tok.length - 1)
-    val sb = new StringBuilder(body.length)
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c == '\\' && i + 1 < body.length) {
-        body.charAt(i + 1) match {
-          case 'u' => sb.append(Integer.parseInt(body.substring(i + 2, i + 6), 16).toChar); i += 6
-          case e => sb.append(e); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
+  /** The JSON text of [[canonValue]] — the token [[ColStats]] carries. */
+  private[sinks] def canonToken(v: Any): String = Json.render(canonValue(v))
+
+  /** cmp on canonical values; None = not comparable (null / kind
+    * mismatch). Strings compare on the decoded value, numbers exactly. */
+  private def cmpValues(a: JValue, b: JValue): Option[Int] = (a, b) match {
+    case (JString(x), JString(y)) => Some(x.compareTo(y))
+    case _ => for (x <- decimalOf(a); y <- decimalOf(b)) yield x.compare(y)
   }
 
-  /** cmp on canonical tokens; None = not comparable (null / kind
-    * mismatch). Strings compare on the UNESCAPED value — the escaped
-    * form is not order-preserving (any raw char below '"' would sort
-    * prefixes wrong). */
-  private def cmpTokens(a: String, b: String): Option[Int] = {
-    val aStr = a.startsWith("\""); val bStr = b.startsWith("\"")
-    if (a == "null" || b == "null") None
-    else if (aStr != bStr) None
-    else if (aStr) Some(unjstr(a).compareTo(unjstr(b)))
-    else Some(BigDecimal(a).compare(BigDecimal(b)))
+  private def decimalOf(v: JValue): Option[BigDecimal] = v match {
+    case JInt(i) => Some(BigDecimal(i))
+    case JDecimal(d) => Some(d)
+    case _ => None
   }
 
   /** A commit's sidecar content: per-(file,col) zone maps, per-file row
@@ -409,16 +365,18 @@ object VersionedTable {
     * skips a file whose [min,max] spans the value but whose bucket bit
     * is clear (the ORC-bloom / Iceberg-value-set shape, one-hash form —
     * false positives only cost an open, never correctness). */
-  private final case class SidecarStats(cols: Seq[(String, String, ColStats)],
-                                        rows: Seq[(String, Long)],
-                                        sets: Seq[(String, String, String)] = Nil) {
+  private final case class SidecarStats(cols: Seq[Json.StatsLine],
+                                        rows: Seq[Json.RowsLine],
+                                        sets: Seq[Json.BucketsLine] = Nil) {
     def isEmpty: Boolean = cols.isEmpty && rows.isEmpty && sets.isEmpty
     def ++(o: SidecarStats): SidecarStats =
       SidecarStats(cols ++ o.cols, rows ++ o.rows, sets ++ o.sets)
     def filterFiles(keep: Set[String]): SidecarStats =
-      SidecarStats(cols.filter(x => keep.contains(x._1)),
-        rows.filter(x => keep.contains(x._1)),
-        sets.filter(x => keep.contains(x._1)))
+      SidecarStats(cols.filter(l => keep(l.name)), rows.filter(l => keep(l.name)),
+        sets.filter(l => keep(l.name)))
+    /** file -> column -> zone map */
+    def zoneMaps: Map[String, Map[String, Json.StatsLine]] =
+      cols.groupBy(_.name).map { case (f, xs) => (f, xs.map(l => (l.col, l)).toMap) }
   }
   private object SidecarStats { val empty: SidecarStats = SidecarStats(Nil, Nil) }
 
@@ -489,130 +447,100 @@ object VersionedTable {
       cols = collected.flatMap { r =>
         val fileName = new Path(r.getAs[String]("__file")).getName
         cols.map { c =>
-          (fileName, c, ColStats(
-            canonToken(r.getAs[Any](s"__min_$c")),
-            canonToken(r.getAs[Any](s"__max_$c")),
-            Option(r.getAs[Any](s"__nulls_$c")).fold(0L)(_.toString.toLong)))
+          Json.StatsLine(fileName, c,
+            canonValue(r.getAs[Any](s"__min_$c")),
+            canonValue(r.getAs[Any](s"__max_$c")),
+            Option(r.getAs[Any](s"__nulls_$c")).fold(0L)(_.toString.toLong))
         }
       },
       rows = collected.map { r =>
-        (new Path(r.getAs[String]("__file")).getName, r.getAs[Long]("__rows"))
+        Json.RowsLine(new Path(r.getAs[String]("__file")).getName, r.getAs[Long]("__rows"))
       },
       sets = collected.flatMap { r =>
         val fileName = new Path(r.getAs[String]("__file")).getName
         cols.filter(bitmapCols).map { c =>
-          (fileName, c,
+          Json.BucketsLine(fileName, c,
             renderBitmap(r.getAs[Seq[Int]](s"__set_$c")))
         }
       })
   }
 
-  private def statsLine(file: String, col: String, s: ColStats): String =
-    s"""{"name":${jstr(file)},"col":${jstr(col)},"min":${s.min},"max":${s.max},"nulls":${s.nulls}}"""
-
-  private def rowsLine(file: String, rows: Long): String =
-    s"""{"name":${jstr(file)},"rows":$rows}"""
-
-  private val RowsLineRe =
-    """\{"name":"((?:[^"\\]|\\.)*)","rows":(\d+)\}""".r
-
-  private def setLine(file: String, col: String, b64: String): String =
-    s"""{"name":${jstr(file)},"col":${jstr(col)},"buckets":${jstr(b64)}}"""
-
-  private val SetLineRe =
-    """\{"name":"((?:[^"\\]|\\.)*)","col":"((?:[^"\\]|\\.)*)","buckets":"([A-Za-z0-9+/=]*)"\}""".r
-
-  // min/max are canonical tokens: null | decimal | JSON string — match
-  // them precisely (a greedy .* would split wrong on a string value
-  // containing ","max":)
-  private val StatsLineRe =
-    ("""\{"name":"((?:[^"\\]|\\.)*)","col":"((?:[^"\\]|\\.)*)",""" +
-      """"min":(null|-?\d+(?:\.\d+)?|"(?:[^"\\]|\\.)*"),""" +
-      """"max":(null|-?\d+(?:\.\d+)?|"(?:[^"\\]|\\.)*"),"nulls":(\d+)\}""").r
-
-  private def renderSidecar(all: SidecarStats): Seq[String] =
-    all.cols.sortBy(x => (x._1, x._2)).map { case (f, c, s) => statsLine(f, c, s) } ++
-      all.rows.sortBy(_._1).map { case (f, n) => rowsLine(f, n) } ++
-      all.sets.sortBy(x => (x._1, x._2)).map { case (f, c, b) => setLine(f, c, b) }
-
-  private def writeStatsFile(fs: FileSystem, root: Path, name: String,
-                             lines: Seq[String]): Unit = {
-    // commit-unique name: safe to overwrite on a rebase retry
-    val os = fs.create(new Path(logDir(root), name), true)
-    try os.write((lines.mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-  }
+  /** Write `all` as the commit's sidecar `stats-<commitId>.jsonl` (a
+    * commit-unique name: safe to overwrite on a rebase retry); None when
+    * there is nothing to record. */
+  private def statsFileFor(fs: FileSystem, root: Path, commitId: String,
+                           all: SidecarStats): Option[String] =
+    if (all.isEmpty) None
+    else {
+      val name = s"stats-$commitId.jsonl"
+      Json.writeFile(fs, new Path(logDir(root), name),
+        (all.cols.sortBy(l => (l.name, l.col)).map(Json.write) ++
+          all.rows.sortBy(_.name).map(Json.write) ++
+          all.sets.sortBy(l => (l.name, l.col)).map(Json.write)).mkString("", "\n", "\n"))
+      Some(name)
+    }
 
   private def readStatsLines(fs: FileSystem, root: Path,
                              name: String): SidecarStats = {
-    val p = new Path(logDir(root), name)
-    if (!fs.exists(p)) return SidecarStats.empty // conservative: prune nothing
-    val in = fs.open(p)
-    val text = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-      out.toString("UTF-8")
-    } finally in.close()
-    def un(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
-    val lines = text.split('\n').toSeq.filter(_.nonEmpty)
-    SidecarStats(
-      cols = lines.collect { case StatsLineRe(f, c, mn, mx, nulls) =>
-        (un(f), un(c), ColStats(mn, mx, nulls.toLong)) },
-      rows = lines.collect { case RowsLineRe(f, n) => (un(f), n.toLong) },
-      sets = lines.collect { case SetLineRe(f, c, b) => (un(f), un(c), b) })
+    val lines =
+      try Json.readFile(fs, new Path(logDir(root), name)).split('\n').toSeq
+        .filter(_.nonEmpty).map(Json.parse)
+      catch { case _: java.io.FileNotFoundException =>
+        return SidecarStats.empty } // conservative: prune nothing
+    // one sidecar holds three line kinds; each is told by its own field
+    def kind[A](field: String)(implicit mf: scala.reflect.Manifest[A]): Seq[A] =
+      lines.filter(l => (l \ field) != JNothing).map(Json.extract[A](_))
+    SidecarStats(kind[Json.StatsLine]("min"), kind[Json.RowsLine]("rows"),
+      kind[Json.BucketsLine]("buckets"))
   }
 
-  private def sidecarOf(fs: FileSystem, root: Path, v: Long): SidecarStats =
-    manifestField(manifestText(fs, root, v), "stats_file") match {
-      case None => SidecarStats.empty
-      case Some(name) => readStatsLines(fs, root, name)
-    }
+  private def sidecarOf(fs: FileSystem, root: Path, m: Json.Manifest): SidecarStats =
+    m.stats_file.fold(SidecarStats.empty)(readStatsLines(fs, root, _))
+
+  private def sidecarAt(spark: SparkSession, location: String, v: Long): SidecarStats = {
+    val root = new Path(location)
+    val fs = fsFor(spark, root)
+    sidecarOf(fs, root, manifestOf(fs, root, v))
+  }
 
   /** Per-file stats of version `v`: file -> column -> stats. Empty map if
     * the version carries no stats (readers then prune nothing). */
   def fileStats(spark: SparkSession, location: String,
                 v: Long): Map[String, Map[String, ColStats]] =
-    sidecarOf(fsFor(spark, new Path(location)), new Path(location), v)
-      .cols.groupBy(_._1).map { case (f, xs) =>
-        (f, xs.map { case (_, c, s) => (c, s) }.toMap) }
+    sidecarAt(spark, location, v).zoneMaps.map { case (f, cs) =>
+      (f, cs.map { case (c, l) =>
+        (c, ColStats(Json.render(l.min), Json.render(l.max), l.nulls)) }) }
 
   /** Per-file row counts of version `v` (recorded when the commit ran
     * with statsColumns). Empty if the version carries no sidecar. */
   def fileRows(spark: SparkSession, location: String,
                v: Long): Map[String, Long] =
-    sidecarOf(fsFor(spark, new Path(location)), new Path(location), v)
-      .rows.toMap
+    sidecarAt(spark, location, v).rows.map(l => (l.name, l.rows)).toMap
 
   /** The columns the table's LATEST version tracks zone maps for —
     * what a maintenance rewrite (compact / cluster) must recompute so
     * its overwrite commit doesn't silently drop the pruning tier. */
-  def trackedStatsColumns(spark: SparkSession, location: String): Seq[String] = {
-    val vs = versions(spark, location)
-    if (vs.isEmpty) Nil
-    else sidecarOf(fsFor(spark, new Path(location)), new Path(location), vs.last)
-      .cols.map(_._2).distinct.sorted
-  }
+  def trackedStatsColumns(spark: SparkSession, location: String): Seq[String] =
+    versions(spark, location).lastOption.fold(Seq.empty[String])(v =>
+      trackedColumns(sidecarAt(spark, location, v)))
+
+  private def trackedColumns(sc: SidecarStats): Seq[String] =
+    sc.cols.map(_.col).distinct.sorted
 
   /** The highest batch id `app` has committed (and its version), scanning
-    * newest-first. The streaming exactly-once check: a foreachBatch
-    * REPLAY (crash between sink commit and checkpoint commit) re-offers
-    * a batch id the table already holds — the commit must be skipped,
-    * not appended twice. */
-  private def lastTxn(fs: FileSystem, root: Path, vs: Seq[Long],
-                      app: String): Option[(Long, Long)] = {
-    val appJson = jstr(app)
-    vs.sorted.reverse.iterator.map { v =>
-      val text = manifestText(fs, root, v)
-      if (text.contains(s""""txn_app":$appJson"""))
-        """"txn_batch":(\d+)""".r.findFirstMatchIn(text)
-          .map(m => (m.group(1).toLong, v))
-      else None
-    }.collectFirst { case Some(hit) => hit }
-  }
+    * `vs` newest-first through `manifest`. The streaming exactly-once
+    * check: a foreachBatch REPLAY (crash between sink commit and
+    * checkpoint commit) re-offers a batch id the table already holds —
+    * the commit must be skipped, not appended twice. */
+  private def lastTxn(vs: Seq[Long], app: String,
+                      manifest: Long => Json.Manifest): Option[(Long, Long)] =
+    vs.sorted.reverseIterator.flatMap { v =>
+      val m = manifest(v)
+      if (m.txn_app.contains(app)) m.txn_batch.map((_, v)) else None
+    }.nextOption()
 
   private def stageAndMove(fs: FileSystem, root: Path, df: DataFrame,
-                           format: String, options: Map[String, String]): (String, Seq[(String, Long)]) = {
+                           format: String, options: Map[String, String]): (String, Seq[Json.FileEntry]) = {
     val commitId = java.util.UUID.randomUUID().toString.take(8)
     val stage = new Path(root, s".stage-$commitId")
     df.write.format(format).options(graft.sources.Sources.mapOptions(options))
@@ -622,7 +550,7 @@ object VersionedTable {
       val dst = new Path(dataDir(root), name)
       if (!fs.rename(st.getPath, dst))
         throw new java.io.IOException(s"versioned commit: move ${st.getPath} -> $dst failed")
-      (name, st.getLen)
+      Json.FileEntry(name, st.getLen)
     }
     fs.delete(stage, true)
     (commitId, moved)
@@ -654,9 +582,10 @@ object VersionedTable {
     // only at read time (missing/extra columns depending on which file
     // the reader samples first). Evolution is opt-in: commit AND read
     // with mergeSchema=true (one footer read — metadata, not data).
+    val manifest = manifestReader(fs, root)
     if (mode == "append") {
       versions(spark, location).lastOption.foreach { lv =>
-        val existing = readManifest(fs, root, lv)
+        val existing = manifest(lv).names
         if (existing.nonEmpty &&
           !options.get("mergeSchema").exists(_.equalsIgnoreCase("true"))) {
           val tableCols = spark.read.format(format)
@@ -681,7 +610,7 @@ object VersionedTable {
     // a WAL replay: skip BEFORE any data is written, return the version
     // that already holds it
     txn.foreach { case (app, batch) =>
-      lastTxn(fs, root, versions(spark, location), app).foreach {
+      lastTxn(versions(spark, location), app, manifest).foreach {
         case (lastBatch, atV) =>
           if (lastBatch >= batch) {
             graft.log.Log.info("versioned commit: txn replay skipped",
@@ -698,8 +627,7 @@ object VersionedTable {
     // commit's data, never of the table
     val newStats: SidecarStats =
       if (statsColumns.isEmpty) SidecarStats.empty
-      else computeStats(spark,
-        moved.map { case (n, _) => new Path(dataDir(root), n).toString },
+      else computeStats(spark, dataPaths(root, moved.map(_.name)),
         statsColumns, format, options)
     var attempt = 0
     while (attempt < maxRetries) {
@@ -709,35 +637,23 @@ object VersionedTable {
           s"versioned commit: serializable conflict at '$location' — snapshot " +
             s"was v$exp, latest is v${latest.getOrElse(0L)}; re-read and re-merge")
       }
-      val base: Seq[(String, Long)] =
-        if (mode == "append")
-          latest.toSeq.flatMap(v => readManifest(fs, root, v)).map { n =>
-            (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-          }
-        else Seq.empty
+      // an append builds on the latest manifest — opened once per
+      // attempt — and carries its file entries as recorded (data files
+      // are never rewritten, so their sizes stand)
+      val head = if (mode == "append") latest.map(manifest) else None
+      val base = head.fold(Seq.empty[Json.FileEntry])(_.files)
       val v = latest.getOrElse(0L) + 1
       // an append carries the base files' stats forward by name, so one
       // sidecar per manifest covers every file it references; written
       // BEFORE the CAS (commit-unique name — losers leave a vacuumable
       // orphan, never a dangling reference)
-      val statsFile: Option[String] = {
-        val baseStats =
-          if (mode == "append" && latest.nonEmpty)
-            sidecarOf(fs, root, latest.get).filterFiles(base.map(_._1).toSet)
-          else SidecarStats.empty
-        val all = baseStats ++ newStats
-        if (all.isEmpty) None
-        else {
-          val name = s"stats-$commitId.jsonl"
-          writeStatsFile(fs, root, name, renderSidecar(all))
-          Some(name)
-        }
-      }
+      val baseStats = head.fold(SidecarStats.empty)(m =>
+        sidecarOf(fs, root, m).filterFiles(m.names.toSet))
+      val statsFile = statsFileFor(fs, root, commitId, baseStats ++ newStats)
       // an append keeps every base file, so the base deletion vector
       // stays valid verbatim — carry the sidecar BY NAME (zero rewrite);
       // an overwrite replaces the file set and clears it
-      val dvCarry: Option[(String, Long)] =
-        if (mode == "append") latest.flatMap(dvOf(fs, root, _)) else None
+      val dvCarry = head.flatMap(_.dv)
       if (writeManifestCas(fs, root, v, mode, base ++ moved, txn, statsFile, dvCarry)) return v
       attempt += 1 // lost the race: re-read latest and rebase
     }
@@ -759,16 +675,14 @@ object VersionedTable {
     val v = asOf.getOrElse(vs.last)
     if (!vs.contains(v)) throw new graft.config.ConfigError(
       s"versioned read: version $v not in committed set ${vs.mkString("[", ",", "]")}")
-    val files = readManifest(fs, root, v)
-      .map(n => new Path(dataDir(root), n).toString)
-    if (files.isEmpty)
+    val m = manifestOf(fs, root, v)
+    if (m.files.isEmpty)
       throw new graft.config.ConfigError(
         s"versioned read: version $v of '$location' references no files")
     val base = spark.read.format(format)
       .options(graft.sources.Sources.mapOptions(options))
-      .load(files: _*)
-    dvOf(fs, root, v).fold(base) { case (name, _) =>
-      applyDv(spark, root, base, name) }
+      .load(dataPaths(root, m.names): _*)
+    m.dv_file.fold(base)(applyDv(spark, root, base, _))
   }
 
   /** FILE-LEVEL MERGE (upsert): arrivals replace table rows with equal
@@ -874,18 +788,20 @@ object VersionedTable {
         format, options, statsColumns = statsColumns,
         expectedLatest = Some(0L))
     val latest = vs.last
-    val files = readManifest(fs, root, latest)
-    val stats = fileStats(spark, location, latest)
+    val head = manifestOf(fs, root, latest)
+    val files = head.names
+    val sidecar = sidecarOf(fs, root, head)
+    val stats = sidecar.zoneMaps
     val k0 = keys.head
     val bounds = arrivals.agg(fmin(col(k0)), fmax(col(k0))).head()
-    val (lo, hi) = (canonToken(bounds.get(0)), canonToken(bounds.get(1)))
+    val (lo, hi) = (canonValue(bounds.get(0)), canonValue(bounds.get(1)))
     def touchedBy(f: String): Boolean =
-      if (lo == "null") false // every arrival key NULL: equality never matches
+      if (lo == JNull) false // every arrival key NULL: equality never matches
       else stats.get(f).flatMap(_.get(k0)) match {
         case None => true // no zone map: must assume a match
         case Some(s) =>
-          if (s.min == "null" && s.max == "null") false // all-null-key file
-          else (cmpTokens(s.max, lo), cmpTokens(s.min, hi)) match {
+          if (s.min == JNull && s.max == JNull) false // all-null-key file
+          else (cmpValues(s.max, lo), cmpValues(s.min, hi)) match {
             case (Some(a), Some(b)) => a >= 0 && b <= 0 // ranges overlap
             case _ => true // kinds incomparable: conservative rewrite
           }
@@ -957,7 +873,7 @@ object VersionedTable {
             "pass mergeSchema=true in options (commit AND read) to evolve")
       }
     }
-    val latestDv = dvOf(fs, root, latest)
+    val latestDv = head.dv
     // live rows of the named files (a touched file's deleted rows must
     // not resurrect — the DV applies to the snapshot being merged).
     // The EVALUATOR reads the rewrite set (`touched` — which is ALL
@@ -968,7 +884,7 @@ object VersionedTable {
     def liveOf(names: Seq[String]): DataFrame = {
       val base = spark.read.format(format)
         .options(graft.sources.Sources.mapOptions(options))
-        .load(names.map(n => new Path(dataDir(root), n).toString): _*)
+        .load(dataPaths(root, names): _*)
       latestDv.fold(base) { case (name, _) =>
         applyDv(spark, root, base, name) }
     }
@@ -1012,7 +928,7 @@ object VersionedTable {
       else {
         val base = spark.read.format(format)
           .options(graft.sources.Sources.mapOptions(options))
-          .load(untouched.map(n => new Path(dataDir(root), n).toString): _*)
+          .load(dataPaths(root, untouched): _*)
         val live = livePositions(spark, root, base, latestDv.map(_._1))
         // zone-miss files cannot hold an arrival key, but carried
         // zone-HIT files (no matched actions) can — those matched rows
@@ -1039,21 +955,12 @@ object VersionedTable {
       format, options)
     val newStats =
       if (statsColumns.isEmpty) SidecarStats.empty
-      else computeStats(spark,
-        moved.map { case (n, _) => new Path(dataDir(root), n).toString },
+      else computeStats(spark, dataPaths(root, moved.map(_.name)),
         statsColumns, format, options)
-    val carried = sidecarOf(fs, root, latest).filterFiles(untouched.toSet)
-    val all = carried ++ newStats
-    val statsFile =
-      if (all.isEmpty) None
-      else {
-        val name = s"stats-$commitId.jsonl"
-        writeStatsFile(fs, root, name, renderSidecar(all))
-        Some(name)
-      }
-    val untouchedSized = untouched.map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
+    val carriedNames = untouched.toSet
+    val statsFile = statsFileFor(fs, root, commitId,
+      sidecar.filterFiles(carriedNames) ++ newStats)
+    val untouchedEntries = head.files.filter(f => carriedNames(f.name))
     // deletion vector: rewritten files materialized their deletes away;
     // entries for the CARRIED files stay live and move to a fresh
     // filtered sidecar, joined by the BY SOURCE claimed positions
@@ -1086,7 +993,7 @@ object VersionedTable {
     // concurrent commit landed since our snapshot, and our merged frame
     // is stale (it would silently drop that writer's rows)
     if (!writeManifestCas(fs, root, latest + 1, "merge",
-      untouchedSized ++ moved, None, statsFile, dvNext))
+      untouchedEntries ++ moved, None, statsFile, dvNext))
       throw new java.util.ConcurrentModificationException(
         s"versioned merge: serializable conflict at '$location' — snapshot " +
           s"was v$latest; a concurrent commit won v${latest + 1}; re-read and re-merge")
@@ -1138,11 +1045,11 @@ object VersionedTable {
         s"versioned delete: serializable conflict at '$location' — snapshot " +
           s"was v$exp, latest is v$latest; re-read and re-delete")
     }
-    val files = readManifest(fs, root, latest)
-    val dvPrev = dvOf(fs, root, latest)
+    val head = manifestOf(fs, root, latest)
+    val dvPrev = head.dv
     val base = spark.read.format(format)
       .options(graft.sources.Sources.mapOptions(options))
-      .load(files.map(n => new Path(dataDir(root), n).toString): _*)
+      .load(dataPaths(root, head.names): _*)
     // only LIVE rows can match (a row deleted twice would double-count)
     val live = livePositions(spark, root, base, dvPrev.map(_._1))
     // PINNED once (localCheckpoint, eager): the matched set feeds both
@@ -1166,12 +1073,8 @@ object VersionedTable {
     newDv.write.mode(SaveMode.Overwrite)
       .parquet(new Path(logDir(root), dvName).toString)
     val dvRows = dvPrev.fold(0L)(_._2) + nMatched
-    val sized = files.map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
-    val statsFile = manifestField(manifestText(fs, root, latest), "stats_file")
-    if (!writeManifestCas(fs, root, latest + 1, "delete", sized, None,
-      statsFile, Some((dvName, dvRows))))
+    if (!writeManifestCas(fs, root, latest + 1, "delete", head.files, None,
+      head.stats_file, Some((dvName, dvRows))))
       throw new java.util.ConcurrentModificationException(
         s"versioned delete: serializable conflict at '$location' — snapshot " +
           s"was v$latest; a concurrent commit won v${latest + 1}; re-delete")
@@ -1211,11 +1114,11 @@ object VersionedTable {
         s"versioned update: serializable conflict at '$location' — snapshot " +
           s"was v$exp, latest is v$latest; re-read and re-update")
     }
-    val files = readManifest(fs, root, latest)
-    val dvPrev = dvOf(fs, root, latest)
+    val head = manifestOf(fs, root, latest)
+    val dvPrev = head.dv
     val base = spark.read.format(format)
       .options(graft.sources.Sources.mapOptions(options))
-      .load(files.map(n => new Path(dataDir(root), n).toString): _*)
+      .load(dataPaths(root, head.names): _*)
     val live = livePositions(spark, root, base, dvPrev.map(_._1))
     val dataCols = base.columns.filterNot(Set("__dv_file", "__dv_pos")).toSeq
     set.keys.foreach { c =>
@@ -1261,29 +1164,16 @@ object VersionedTable {
     newDv.write.mode(SaveMode.Overwrite)
       .parquet(new Path(logDir(root), dvName).toString)
     val dvRows = dvPrev.fold(0L)(_._2) + nMatched
-    val sized = files.map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
     // stats: carried by name (still sound over-approximations for the
     // old files); the NEW files get fresh stats for the tracked columns
-    val statsFile: Option[String] = {
-      val tracked = trackedStatsColumns(spark, location)
-      val carried = manifestField(manifestText(fs, root, latest), "stats_file")
-        .map(readStatsLines(fs, root, _)).getOrElse(SidecarStats.empty)
-      val fresh =
-        if (tracked.isEmpty) SidecarStats.empty
-        else computeStats(spark,
-          moved.map { case (n, _) => new Path(dataDir(root), n).toString },
-          tracked, format, options)
-      val all = carried ++ fresh
-      if (all.isEmpty) None
-      else {
-        val name = s"stats-$commitId.jsonl"
-        writeStatsFile(fs, root, name, renderSidecar(all))
-        Some(name)
-      }
-    }
-    if (!writeManifestCas(fs, root, latest + 1, "update", sized ++ moved, None,
+    val carried = sidecarOf(fs, root, head)
+    val tracked = trackedColumns(carried)
+    val fresh =
+      if (tracked.isEmpty) SidecarStats.empty
+      else computeStats(spark, dataPaths(root, moved.map(_.name)),
+        tracked, format, options)
+    val statsFile = statsFileFor(fs, root, commitId, carried ++ fresh)
+    if (!writeManifestCas(fs, root, latest + 1, "update", head.files ++ moved, None,
       statsFile, Some((dvName, dvRows))))
       throw new java.util.ConcurrentModificationException(
         s"versioned update: serializable conflict at '$location' — snapshot " +
@@ -1339,23 +1229,25 @@ object VersionedTable {
     if (vs.isEmpty) throw new graft.config.ConfigError(
       s"versioned compactDeletes: no committed versions at '$location'")
     val latest = vs.last
-    val dvPrev = dvOf(fs, root, latest) match {
+    val head = manifestOf(fs, root, latest)
+    val dvPrev = head.dv match {
       case None => return (latest, 0)
       case Some(x) => x
     }
-    val files = readManifest(fs, root, latest)
+    val files = head.names
+    val sidecar = sidecarOf(fs, root, head)
     // deleted counts per file — the DV is delete-sized
     val delCounts = readDv(spark, root, dvPrev._1)
       .groupBy(col("file")).agg(count(lit(1)).as("n_del"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val knownRows = fileRows(spark, location, latest)
+    val knownRows = sidecar.rows.map(l => (l.name, l.rows)).toMap
     val uncounted = delCounts.keySet.filter(f =>
       files.contains(f) && !knownRows.contains(f)).toSeq
     val countedRows: Map[String, Long] =
       if (uncounted.isEmpty) Map.empty
       else spark.read.format(format)
         .options(graft.sources.Sources.mapOptions(options))
-        .load(uncounted.map(n => new Path(dataDir(root), n).toString): _*)
+        .load(dataPaths(root, uncounted): _*)
         .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1).as("f"))
         .agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -1369,7 +1261,7 @@ object VersionedTable {
     val carried = files.filterNot(rewrite.toSet)
     val liveBase = spark.read.format(format)
       .options(graft.sources.Sources.mapOptions(options))
-      .load(rewrite.map(n => new Path(dataDir(root), n).toString): _*)
+      .load(dataPaths(root, rewrite): _*)
     val live = applyDv(spark, root, liveBase, dvPrev._1)
     val (commitId, moved) = stageAndMove(fs, root, live, format, options)
     // DV: drop entries for the rewritten files, keep the rest
@@ -1385,26 +1277,16 @@ object VersionedTable {
         Some((name, nRemain))
       }
     // stats: carry for untouched files; fresh for the rewritten output
-    val tracked = trackedStatsColumns(spark, location)
-    val carriedStats = sidecarOf(fs, root, latest).filterFiles(carried.toSet)
+    val tracked = trackedColumns(sidecar)
     val fresh =
       if (tracked.isEmpty) SidecarStats.empty
-      else computeStats(spark,
-        moved.map { case (n, _) => new Path(dataDir(root), n).toString },
+      else computeStats(spark, dataPaths(root, moved.map(_.name)),
         tracked, format, options)
-    val all = carriedStats ++ fresh
-    val statsFile =
-      if (all.isEmpty) None
-      else {
-        val name = s"stats-$commitId.jsonl"
-        writeStatsFile(fs, root, name, renderSidecar(all))
-        Some(name)
-      }
-    val carriedSized = carried.map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
+    val carriedNames = carried.toSet
+    val statsFile = statsFileFor(fs, root, commitId,
+      sidecar.filterFiles(carriedNames) ++ fresh)
     if (!writeManifestCas(fs, root, latest + 1, "compact_deletes",
-      carriedSized ++ moved, None, statsFile, dvNext))
+      head.files.filter(f => carriedNames(f.name)) ++ moved, None, statsFile, dvNext))
       throw new java.util.ConcurrentModificationException(
         s"versioned compactDeletes: serializable conflict at '$location' — " +
           s"a concurrent commit won v${latest + 1}; re-run")
@@ -1441,15 +1323,11 @@ object VersionedTable {
     if (branchVersions(spark, location, branch).nonEmpty)
       throw new graft.config.ConfigError(
         s"versioned branch: branch '$branch' already exists at '$location'")
-    // the fork manifest: the base's text with mode rewritten — file,
-    // stats and DV references copied by name, zero bytes moved
-    val text = manifestText(fs, root, base)
-      .replaceFirst(""""mode":"[^"]*"""", s""""mode":"branch"""")
+    // the fork manifest: the base's with mode `branch` — file, stats
+    // and DV references copied by name, zero bytes moved
     val p = branchManifestPath(root, base, branch)
     val tmp = new Path(logDir(root), s".tmp-branch-$branch-${java.util.UUID.randomUUID().toString.take(8)}")
-    val os = fs.create(tmp, true)
-    try os.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
+    Json.writeFile(fs, tmp, Json.write(manifestOf(fs, root, base).copy(mode = "branch")))
     try {
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, fs.getConf)
       fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.NONE)
@@ -1487,45 +1365,27 @@ object VersionedTable {
     // exactly-once for streaming foreachBatch INTO a branch: a replayed
     // (app, batch) — or any later batch of the same app — is skipped
     // before any data is staged (the [[commit]] txn contract)
+    def manifest(v: Long) = manifestAt(fs, branchManifestPath(root, v, branch))
     txn.foreach { case (app, batch) =>
-      val appJson = jstr(app)
-      val replayedAt = branchVersions(spark, location, branch).sorted.reverse
-        .iterator.map { v =>
-          val text = manifestTextAt(fs, branchManifestPath(root, v, branch))
-          if (text.contains(s""""txn_app":$appJson"""))
-            """"txn_batch":(\d+)""".r.findFirstMatchIn(text)
-              .map(m => (m.group(1).toLong, v))
-          else None
-        }.collectFirst { case Some(hit) => hit }
-      replayedAt.foreach { case (lastBatch, atV) =>
-        if (lastBatch >= batch) {
-          graft.log.Log.info("versioned branch commit: txn replay skipped",
-            "location" -> location, "branch" -> branch,
-            "batch" -> batch.toString, "committed_at" -> s"v$atV")
-          return atV
-        }
+      lastTxn(branchVersions(spark, location, branch), app, manifest).foreach {
+        case (lastBatch, atV) =>
+          if (lastBatch >= batch) {
+            graft.log.Log.info("versioned branch commit: txn replay skipped",
+              "location" -> location, "branch" -> branch,
+              "batch" -> batch.toString, "committed_at" -> s"v$atV")
+            return atV
+          }
       }
     }
     val (commitId, moved) = stageAndMove(fs, root, df, format, options)
     var attempt = 0
     while (attempt < maxRetries) {
       val head = branchVersions(spark, location, branch).last
-      val headText = manifestTextAt(fs, branchManifestPath(root, head, branch))
-      val base: Seq[(String, Long)] =
-        if (mode == "append") filesOfText(headText).map { n =>
-          (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-        } else Seq.empty
-      val statsCarry =
-        if (mode == "append") manifestField(headText, "stats_file") else None
-      val dvCarry =
-        if (mode == "append")
-          manifestField(headText, "dv_file").map { name =>
-            (name, """"dv_rows":(\d+)""".r.findFirstMatchIn(headText)
-              .map(_.group(1).toLong).getOrElse(0L))
-          }
-        else None
-      if (writeManifestCas(fs, root, head + 1, mode, base ++ moved, txn,
-        statsCarry, dvCarry, Some(branch))) {
+      // an append carries the head's files, stats and DV by name
+      val carry = if (mode == "append") Some(manifest(head)) else None
+      if (writeManifestCas(fs, root, head + 1, mode,
+        carry.fold(Seq.empty[Json.FileEntry])(_.files) ++ moved, txn,
+        carry.flatMap(_.stats_file), carry.flatMap(_.dv), Some(branch))) {
         graft.log.Log.info("versioned branch commit",
           "location" -> location, "branch" -> branch, "version" -> s"v${head + 1}")
         return head + 1
@@ -1549,14 +1409,13 @@ object VersionedTable {
     val v = asOf.getOrElse(bvs.last)
     if (!bvs.contains(v)) throw new graft.config.ConfigError(
       s"versioned branch read: version $v not on branch '$branch' ${bvs.mkString("[", ",", "]")}")
-    val text = manifestTextAt(fs, branchManifestPath(root, v, branch))
-    val files = filesOfText(text)
-    if (files.isEmpty) throw new graft.config.ConfigError(
+    val m = manifestAt(fs, branchManifestPath(root, v, branch))
+    if (m.files.isEmpty) throw new graft.config.ConfigError(
       s"versioned branch read: v$v@$branch of '$location' references no files")
     val base = spark.read.format(format)
       .options(graft.sources.Sources.mapOptions(options))
-      .load(files.map(n => new Path(dataDir(root), n).toString): _*)
-    manifestField(text, "dv_file").fold(base)(applyDv(spark, root, base, _))
+      .load(dataPaths(root, m.names): _*)
+    m.dv_file.fold(base)(applyDv(spark, root, base, _))
   }
 
   /** PUBLISH a branch to main — the WAP promote: the branch head's file
@@ -1580,17 +1439,9 @@ object VersionedTable {
         s"versioned publish: serializable conflict at '$location' — branch " +
           s"'$branch' forked at v$forkBase but main is at v$mainLatest; " +
           "rebaseBranch (append-only staging) or re-fork and re-stage")
-    val headText = manifestTextAt(fs, branchManifestPath(root, bvs.last, branch))
-    val files = filesOfText(headText).map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
-    val statsCarry = manifestField(headText, "stats_file")
-    val dvCarry = manifestField(headText, "dv_file").map { name =>
-      (name, """"dv_rows":(\d+)""".r.findFirstMatchIn(headText)
-        .map(_.group(1).toLong).getOrElse(0L))
-    }
-    if (!writeManifestCas(fs, root, forkBase + 1, "publish", files, None,
-      statsCarry, dvCarry))
+    val head = manifestAt(fs, branchManifestPath(root, bvs.last, branch))
+    if (!writeManifestCas(fs, root, forkBase + 1, "publish", head.files, None,
+      head.stats_file, head.dv))
       throw new java.util.ConcurrentModificationException(
         s"versioned publish: serializable conflict at '$location' — a " +
           s"concurrent commit won v${forkBase + 1}; re-fork and re-stage")
@@ -1618,34 +1469,20 @@ object VersionedTable {
     val bvs = branchVersions(spark, location, branch)
     if (bvs.isEmpty) throw new graft.config.ConfigError(
       s"versioned rebase: branch '$branch' does not exist at '$location'")
-    val modes = bvs.map(v => manifestField(
-      manifestTextAt(fs, branchManifestPath(root, v, branch)), "mode")
-      .getOrElse("overwrite"))
-    val nonAppend = modes.drop(1).filterNot(_ == "append")
+    val lineage = bvs.map(v => manifestAt(fs, branchManifestPath(root, v, branch)))
+    val nonAppend = lineage.drop(1).map(_.mode).filterNot(_ == "append")
     if (nonAppend.nonEmpty) throw new graft.config.ConfigError(
       s"versioned rebase: branch '$branch' has non-append commits " +
         s"(${nonAppend.mkString(", ")}) — a rebase would change their " +
         "semantics; drop the branch and re-stage against the new head")
-    val forkFiles = filesOfText(
-      manifestTextAt(fs, branchManifestPath(root, bvs.head, branch))).toSet
-    val staged = filesOfText(
-      manifestTextAt(fs, branchManifestPath(root, bvs.last, branch)))
-      .filterNot(forkFiles)
+    val forkFiles = lineage.head.names.toSet
+    val staged = lineage.last.files.filterNot(f => forkFiles(f.name))
     val mainLatest = versions(spark, location).last
     if (mainLatest == bvs.head)
       return bvs.head // nothing to rebase onto
-    val newBase = readManifest(fs, root, mainLatest)
-    val sized = (newBase ++ staged).map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
     // carry the NEW main head's stats/DV (they cover its files; the
     // staged files simply have no stats — conservative)
-    val headText = manifestText(fs, root, mainLatest)
-    val statsCarry = manifestField(headText, "stats_file")
-    val dvCarry = manifestField(headText, "dv_file").map { name =>
-      (name, """"dv_rows":(\d+)""".r.findFirstMatchIn(headText)
-        .map(_.group(1).toLong).getOrElse(0L))
-    }
+    val mainHead = manifestOf(fs, root, mainLatest)
     // rewrite the branch lineage CRASH-SAFELY: the complete new lineage
     // (fork + append) is written under a TEMP branch name first, so the
     // staged data files are referenced by at least one full lineage at
@@ -1656,10 +1493,10 @@ object VersionedTable {
     // main head's version number overlaps the old staged range.
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val tmpBranch = s"$branch.rebase-$uuid"
-    val forkText = headText.replaceFirst(""""mode":"[^"]*"""", """"mode":"branch"""")
-    writeRawManifest(fs, root, branchManifestPath(root, mainLatest, tmpBranch), forkText)
-    if (!writeManifestCas(fs, root, mainLatest + 1, "append", sized, None,
-      statsCarry, dvCarry, Some(tmpBranch)))
+    writeRawManifest(fs, root, branchManifestPath(root, mainLatest, tmpBranch),
+      Json.write(mainHead.copy(mode = "branch")))
+    if (!writeManifestCas(fs, root, mainLatest + 1, "append",
+      mainHead.files ++ staged, None, mainHead.stats_file, mainHead.dv, Some(tmpBranch)))
       throw new java.util.ConcurrentModificationException(
         s"versioned rebase: branch '$branch' raced at '$location'")
     // COMMIT MARKER: from this instant the rebase is DECIDED — a crash
@@ -1670,8 +1507,7 @@ object VersionedTable {
     // the uuid-unique name means the CAS always wins.
     val marker = rebaseMarkerPath(root, branch, uuid)
     writeRawManifest(fs, root, marker,
-      s"""{"branch":${jstr(branch)},"tmp":${jstr(tmpBranch)},""" +
-        s""""versions":[$mainLatest,${mainLatest + 1}]}""")
+      Json.write(Json.RebaseMarker(branch, tmpBranch, Seq(mainLatest, mainLatest + 1))))
     bvs.foreach(v => fs.delete(branchManifestPath(root, v, branch), false))
     // publish the new lineage under the real name THROUGH the
     // coordinator (r11 ADVICE: the direct FileContext.rename here made
@@ -1691,13 +1527,13 @@ object VersionedTable {
       val tmpPath = branchManifestPath(root, v, tmpBranch)
       val dst = branchManifestPath(root, v, branch)
       val tmpText =
-        try Some(manifestTextAt(fs, tmpPath))
+        try Some(Json.readFile(fs, tmpPath))
         catch { case _: java.io.FileNotFoundException => None }
       tmpText match {
         case Some(text) =>
           if (!coordinatorImpl.publish(fs, logDir(root), dst,
                 text.getBytes(java.nio.charset.StandardCharsets.UTF_8)) &&
-              manifestTextAt(fs, dst) != text)
+              Json.readFile(fs, dst) != text)
             throw new java.util.ConcurrentModificationException(
               s"versioned rebase: branch '$branch' manifest v$v raced at '$location'")
           fs.delete(tmpPath, false)
@@ -1782,11 +1618,12 @@ object VersionedTable {
     val v = asOf.getOrElse(vs.last)
     if (!vs.contains(v)) throw new graft.config.ConfigError(
       s"versioned read: version $v not in committed set ${vs.mkString("[", ",", "]")}")
-    val files = readManifest(fs, root, v)
-    val stats = fileStats(spark, location, v)
-    val sets = sidecarOf(fs, root, v).sets
-      .groupBy(_._1).map { case (f, xs) =>
-        (f, xs.map { case (_, c, b) => (c, b) }.toMap) }
+    val m = manifestOf(fs, root, v)
+    val files = m.names
+    val sidecar = sidecarOf(fs, root, m)
+    val stats = sidecar.zoneMaps
+    val sets = sidecar.sets.groupBy(_.name).map { case (f, xs) =>
+      (f, xs.map(l => (l.col, l.buckets)).toMap) }
     // the bucket-bitmap tier applies to `=` probes whose toString equals
     // Spark's cast-to-string of the column (integral and string kinds)
     def bitmapCanonical(v: Any): Option[String] = v match {
@@ -1794,16 +1631,16 @@ object VersionedTable {
       case s: String => Some(s)
       case _ => None
     }
-    val preds = predicates.map(p => (p.column, p.op, canonToken(p.value),
+    val preds = predicates.map(p => (p.column, p.op, canonValue(p.value),
       if (p.op == "=") bitmapCanonical(p.value).map(bitmapBucket) else None))
     def mayMatch(f: String): Boolean = preds.forall { case (c, op, tok, bkt) =>
       val rangeOk = stats.get(f).flatMap(_.get(c)) match {
         case None => true // no stats for this file/column: keep
         case Some(s) =>
-          if (s.min == "null" && s.max == "null") false // all-null file
+          if (s.min == JNull && s.max == JNull) false // all-null file
           else {
-            val vsMin = cmpTokens(tok, s.min) // sign of (value - min)
-            val vsMax = cmpTokens(tok, s.max)
+            val vsMin = cmpValues(tok, s.min) // sign of (value - min)
+            val vsMax = cmpValues(tok, s.max)
             (op, vsMin, vsMax) match {
               case ("=", Some(a), Some(b)) => a >= 0 && b <= 0
               case ("<", Some(a), _) => a > 0 // min < value
@@ -1821,7 +1658,7 @@ object VersionedTable {
       // holds "050", yet Spark's equality casts and matches; kind
       // mismatch falls back to the conservative range answer.
       val kindOk = stats.get(f).flatMap(_.get(c))
-        .exists(s => cmpTokens(tok, s.min).isDefined)
+        .exists(s => cmpValues(tok, s.min).isDefined)
       val bitmapOk = !kindOk || bkt.forall { b =>
         sets.get(f).flatMap(_.get(c)).forall(b64 => bitmapHas(b64, b))
       }
@@ -1836,24 +1673,16 @@ object VersionedTable {
       else {
         val base = spark.read.format(format)
           .options(graft.sources.Sources.mapOptions(options))
-          .load(kept.map(n => new Path(dataDir(root), n).toString): _*)
+          .load(dataPaths(root, kept): _*)
         // deleted rows stay invisible on the pruned path too (DV entries
         // for pruned-away files anti-join to nothing, harmlessly)
-        dvOf(fs, root, v).fold(base) { case (name, _) =>
-          applyDv(spark, root, base, name) }
+        m.dv_file.fold(base)(applyDv(spark, root, base, _))
       }
     graft.log.Log.info("versioned pruned read",
       "location" -> location, "version" -> s"v$v",
       "files_total" -> files.size.toString, "files_kept" -> kept.size.toString)
     PrunedScan(df, files.size, kept.size)
   }
-
-  private def manifestMode(fs: FileSystem, root: Path, v: Long): String =
-    manifestField(manifestText(fs, root, v), "mode").getOrElse("overwrite")
-
-  private def manifestTs(fs: FileSystem, root: Path, v: Long): Option[Long] =
-    """"ts":(\d+)""".r.findFirstMatchIn(manifestText(fs, root, v))
-      .map(_.group(1).toLong)
 
   /** Time travel by WALL CLOCK: the latest version committed at or
     * before `tsMillis` (versions without a recorded ts — pre-upgrade
@@ -1868,7 +1697,7 @@ object VersionedTable {
     val vs = versions(spark, location)
     if (vs.isEmpty) throw new graft.config.ConfigError(
       s"versioned read: no committed versions at '$location'")
-    vs.filter(v => manifestTs(fs, root, v).getOrElse(0L) <= tsMillis)
+    vs.filter(v => manifestOf(fs, root, v).ts.getOrElse(0L) <= tsMillis)
       .lastOption.getOrElse(throw new graft.config.ConfigError(
         s"versioned read: no version at or before ts $tsMillis at '$location' " +
           s"(earliest is v${vs.head})"))
@@ -1898,22 +1727,23 @@ object VersionedTable {
         s"versioned changes: version $v not in committed set ${vs.mkString("[", ",", "]")}")
     }
     val range = vs.filter(v => v > fromVersion && v <= toVersion)
+    val manifest = manifestReader(fs, root)
     val frames = range.map { v =>
-      val m = manifestMode(fs, root, v)
+      val m = manifest(v).mode
       if (m != "append")
         throw new graft.config.ConfigError(
           s"versioned changes: v$v of '$location' is a $m commit — " +
             "its row-level delta is a full two-snapshot diff; use " +
             s"diffVersions(${v - 1}, $v) or read the snapshot " +
             s"(as_of_version: $v) instead")
-      val prev = readManifest(fs, root, v - 1).toSet
-      val added = readManifest(fs, root, v).filterNot(prev.contains)
+      val prev = manifest(v - 1).names.toSet
+      val added = manifest(v).names.filterNot(prev.contains)
       if (added.isEmpty)
         read(spark, location, Some(v), format, options).limit(0)
           .withColumn("_commit_version", lit(v))
       else spark.read.format(format)
         .options(graft.sources.Sources.mapOptions(options))
-        .load(added.map(n => new Path(dataDir(root), n).toString): _*)
+        .load(dataPaths(root, added): _*)
         .withColumn("_commit_version", lit(v))
     }
     frames.reduceLeft(_.unionByName(_))
@@ -1948,14 +1778,9 @@ object VersionedTable {
         "location" -> location, "version" -> s"v$latest")
       return latest
     }
-    val text = manifestText(fs, root, toVersion)
-    val sized = filesOfText(text).map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
-    val statsCarry = manifestField(text, "stats_file")
-    val dvCarry = dvOf(fs, root, toVersion)
-    if (!writeManifestCas(fs, root, latest + 1, "restore", sized, None,
-      statsCarry, dvCarry))
+    val target = manifestOf(fs, root, toVersion)
+    if (!writeManifestCas(fs, root, latest + 1, "restore", target.files, None,
+      target.stats_file, target.dv))
       throw new java.util.ConcurrentModificationException(
         s"versioned restore: serializable conflict at '$location' — a " +
           s"concurrent commit won v${latest + 1}; re-inspect and re-restore")
@@ -1972,8 +1797,7 @@ object VersionedTable {
   private[graft] def manifestTotalBytes(spark: SparkSession, location: String,
                                         version: Long): Long = {
     val root = new Path(location)
-    val text = manifestText(fsFor(spark, root), root, version)
-    """"bytes":(\d+)""".r.findAllMatchIn(text).map(_.group(1).toLong).sum
+    manifestOf(fsFor(spark, root), root, version).files.map(_.bytes).sum
   }
 
   def history(spark: SparkSession, location: String): DataFrame = {
@@ -1984,26 +1808,15 @@ object VersionedTable {
     if (vs.isEmpty) throw new graft.config.ConfigError(
       s"versioned history: no committed versions at '$location'")
     val rows = vs.map { v =>
-      // ONE manifest fetch per version: mode/ts/bytes/n_files/stats_file
-      // all parse from the same text (a 10k-commit DESCRIBE HISTORY on
+      // ONE manifest fetch per version (a 10k-commit DESCRIBE HISTORY on
       // an object store pays 10k GETs, not 40k)
-      val text = manifestText(fs, root, v)
-      val bytes = """"bytes":(\d+)""".r.findAllMatchIn(text)
-        .map(_.group(1).toLong).sum
-      val nFiles = """"n_files":(\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong).getOrElse(0L)
-      val mode = manifestField(text, "mode").getOrElse("overwrite")
-      val ts = """"ts":(\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong)
-      val sc = manifestField(text, "stats_file")
-        .map(readStatsLines(fs, root, _)).getOrElse(SidecarStats.empty)
+      val m = manifestOf(fs, root, v)
+      val sc = sidecarOf(fs, root, m)
       // deletion vectors hide rows the per-file counts still include
-      val dvRows = """"dv_rows":(\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong).getOrElse(0L)
       val nRows: Any =
-        if (sc.rows.isEmpty) null else sc.rows.map(_._2).sum - dvRows
-      org.apache.spark.sql.Row(v, mode, nFiles, bytes,
-        nRows, ts.map(Long.box).orNull)
+        if (sc.rows.isEmpty) null else sc.rows.map(_.rows).sum - m.dv_rows.getOrElse(0L)
+      org.apache.spark.sql.Row(v, m.mode, m.n_files, m.files.map(_.bytes).sum,
+        nRows, m.ts.map(Long.box).orNull)
     }
     spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](
@@ -2043,27 +1856,22 @@ object VersionedTable {
     // are deleted mid-way and can't be consulted after. LIVE BRANCHES
     // are unconditionally kept: their manifests' file/stats/DV refs
     // must survive until dropBranch (a branch is a ref, not history).
-    val branchTexts = fs.listStatus(logDir(root)).toSeq
+    val branchManifests = fs.listStatus(logDir(root)).toSeq
       .map(_.getPath)
       .filter { p => val n = p.getName
         n.startsWith("v") && n.contains("@") && n.endsWith(".json") }
-      .map(manifestTextAt(fs, _))
-    val keptRefs = (kept.flatMap(v => readManifest(fs, root, v)) ++
-      branchTexts.flatMap(filesOfText)).toSet
-    val anyRefs = (vs.flatMap(v => readManifest(fs, root, v)) ++
-      branchTexts.flatMap(filesOfText)).toSet
-    val keptStats = (kept.flatMap(v =>
-      manifestField(manifestText(fs, root, v), "stats_file")) ++
-      branchTexts.flatMap(manifestField(_, "stats_file"))).toSet
-    val anyStats = (vs.flatMap(v =>
-      manifestField(manifestText(fs, root, v), "stats_file")) ++
-      branchTexts.flatMap(manifestField(_, "stats_file"))).toSet
-    val keptDvs = (kept.flatMap(v =>
-      manifestField(manifestText(fs, root, v), "dv_file")) ++
-      branchTexts.flatMap(manifestField(_, "dv_file"))).toSet
-    val anyDvs = (vs.flatMap(v =>
-      manifestField(manifestText(fs, root, v), "dv_file")) ++
-      branchTexts.flatMap(manifestField(_, "dv_file"))).toSet
+      .map(manifestAt(fs, _))
+    val mains = vs.map(v => (v, manifestOf(fs, root, v))).toMap
+    // (kept, any) references: those of the kept (or of all) main
+    // manifests, plus every branch manifest's
+    def refs(of: Json.Manifest => Iterable[String]): (Set[String], Set[String]) = {
+      val branchRefs = branchManifests.flatMap(of)
+      ((kept.map(mains).flatMap(of) ++ branchRefs).toSet,
+        (vs.map(mains).flatMap(of) ++ branchRefs).toSet)
+    }
+    val (keptRefs, anyRefs) = refs(_.names)
+    val (keptStats, anyStats) = refs(_.stats_file)
+    val (keptDvs, anyDvs) = refs(_.dv_file)
     val now = System.currentTimeMillis()
     val dropped = scala.collection.mutable.ArrayBuffer.empty[String]
     fs.listStatus(dataDir(root)).foreach { st =>

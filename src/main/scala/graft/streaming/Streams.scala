@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import graft.util.Json
 
 /** Structured Streaming tier over the `events` fixture — beyond-reference
   * extension (the reference is batch-only; SURVEY §1 "Streaming: none").
@@ -788,12 +789,7 @@ object Streams {
     val offsetPath = new Path(ckpt, "_graft_cdc_offset.json")
     val lastSeen: Option[Long] =
       if (!fs.exists(offsetPath)) None
-      else {
-        val in = fs.open(offsetPath)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                   finally in.close()
-        """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
-      }
+      else Some(Json.load[Json.CdcOffset](fs, offsetPath).version)
     val vs = graft.sinks.VersionedTable.versions(spark, location)
     require(vs.nonEmpty, s"cdc drain: '$location' is not a versioned table")
     val latest = vs.last
@@ -861,10 +857,8 @@ object Streams {
       fs.mkdirs(ckpt)
       val tmp = new Path(ckpt,
         s".offset-${java.util.UUID.randomUUID().toString.take(8)}")
-      val os = fs.create(tmp, true)
-      try os.write(s"""{"version":$to}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
+      Json.writeFile(fs, tmp,
+        Json.write(Json.CdcOffset(to)))
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(
         ckpt.toUri, spark.sparkContext.hadoopConfiguration)
       fc.rename(tmp, offsetPath, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
@@ -979,13 +973,10 @@ object Streams {
     out.target match {
       case graft.config.TargetSpec.File(location) =>
         val dir = new org.apache.hadoop.fs.Path(location)
-        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val json = metrics.map { case (k, v) => s""""$k":$v""" }
-          .mkString("{", ",", "}")
-        val os = fs.create(
-          new org.apache.hadoop.fs.Path(dir, "_graft_stream_metrics.json"), true)
-        try os.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally os.close()
+        Json.writeFile(
+          dir.getFileSystem(spark.sparkContext.hadoopConfiguration),
+          new org.apache.hadoop.fs.Path(dir, "_graft_stream_metrics.json"),
+          Json.fields(metrics))
       case _ => ()
     }
     graft.log.Log.info("stream drained",

@@ -1225,4 +1225,41 @@ class VersionedTableSpec extends SparkSpec {
     assert(live.select("k").distinct().count() == live.count(),
       "a nondeterministic delete must not duplicate surviving rows")
   }
+
+  test("stats columns with control chars in their names read back decoded") {
+    val loc = tmp("ctl")
+    VersionedTable.commit(spark, loc, Seq((1, 2)).toDF("a\tb", "v"), "overwrite",
+      statsColumns = Seq("a\tb"))
+    val stats = VersionedTable.fileStats(spark, loc, 1L)
+    assert(stats.values.flatMap(_.keys).toSet == Set("a\tb"))
+    assert(VersionedTable.trackedStatsColumns(spark, loc) == Seq("a\tb"))
+  }
+
+  test("zone-map bounds stay exact past 2^53 and at decimal(38,18)") {
+    val loc = tmp("exact")
+    val (dLo, dHi) = (BigDecimal("12345678901234567890.123456789012345678"),
+      BigDecimal("12345678901234567890.123456789012345679"))
+    // two one-row files whose bounds differ only beyond double precision
+    VersionedTable.commit(spark, loc, Seq((Long.MaxValue - 1, dLo)).toDF("k", "d")
+      .coalesce(1), "overwrite", statsColumns = Seq("k", "d"))
+    VersionedTable.commit(spark, loc, Seq((Long.MaxValue, dHi)).toDF("k", "d")
+      .coalesce(1), "append", statsColumns = Seq("k", "d"))
+    val stats = VersionedTable.fileStats(spark, loc, 2L)
+    val bounds = stats.values.map(cs => (cs("k").min, cs("k").max, cs("d").min, cs("d").max)).toSet
+    assert(bounds == Set(
+      (VersionedTable.canonToken(Long.MaxValue - 1), VersionedTable.canonToken(Long.MaxValue - 1),
+        VersionedTable.canonToken(dLo.bigDecimal), VersionedTable.canonToken(dLo.bigDecimal)),
+      (VersionedTable.canonToken(Long.MaxValue), VersionedTable.canonToken(Long.MaxValue),
+        VersionedTable.canonToken(dHi.bigDecimal), VersionedTable.canonToken(dHi.bigDecimal))))
+    def kept(p: VersionedTable.Prune): Seq[Long] = {
+      val scan = VersionedTable.readPruned(spark, loc, Seq(p))
+      assert(scan.totalFiles == 2)
+      scan.df.collect().map(_.getAs[Long]("k")).toSeq
+    }
+    assert(kept(VersionedTable.Prune("k", "=", Long.MaxValue)) == Seq(Long.MaxValue))
+    assert(kept(VersionedTable.Prune("k", ">=", Long.MaxValue)) == Seq(Long.MaxValue))
+    assert(kept(VersionedTable.Prune("k", "<", Long.MaxValue)) == Seq(Long.MaxValue - 1))
+    assert(kept(VersionedTable.Prune("d", ">", dLo.bigDecimal)) == Seq(Long.MaxValue))
+    assert(kept(VersionedTable.Prune("d", "<=", dLo.bigDecimal)) == Seq(Long.MaxValue - 1))
+  }
 }

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # One-command local replica of the driver's correctness gate:
-#   sbt Verify (every SparkEntry query, end-to-end) at sf0.01
+#   the benchmark's and gate_check's own Python unit tests
+#   -> sbt Verify (every SparkEntry query, end-to-end) at sf0.01
 #   -> tools/oracle_check.py   (DuckDB value/schema/rowcount compare)
 #   -> tools/hugeint_audit.py  (oracle output-type sweep: no HUGEINT/
 #      DECIMAL may reach a final column — the ext24 hash-flake class)
@@ -16,6 +17,9 @@ cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="${2:-/tmp/graft-verify-$(basename "$SF_DIR")}"
 ONLY="${3:-}"
+
+python3 -m unittest discover -s perfbench -p 'test_*.py'
+python3 tools/test_gate_check.py
 
 rm -rf "$OUT_DIR"
 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR $ONLY" 2>&1 \
