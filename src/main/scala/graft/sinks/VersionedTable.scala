@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.json4s.{JDecimal, JInt, JNothing, JNull, JString, JValue}
 
@@ -225,6 +226,7 @@ object VersionedTable {
 
   private def writeManifestCas(fs: FileSystem, root: Path, v: Long,
                                mode: String, files: Seq[Json.FileEntry],
+                               schema: Option[StructType],
                                txn: Option[(String, Long)],
                                statsFile: Option[String] = None,
                                dv: Option[(String, Long)] = None,
@@ -233,7 +235,7 @@ object VersionedTable {
     // (informational ordering only — the version number is the truth)
     val manifest = Json.Manifest(v, Some(System.currentTimeMillis()), mode,
       txn.map(_._1), txn.map(_._2), statsFile, dv.map(_._1), dv.map(_._2),
-      files.size, files.sortBy(_.name))
+      files.size, files.sortBy(_.name), schema.map(_.json))
     val p = branch.fold(manifestPath(root, v))(branchManifestPath(root, v, _))
     // The publish primitive is PLUGGABLE ([[CommitCoordinator]]): the
     // default is write-complete-content-then-rename-if-absent
@@ -262,13 +264,84 @@ object VersionedTable {
     v => seen.getOrElseUpdate(v, manifestOf(fs, root, v))
   }
 
+  // ---------------------------------------------------------------- schema
+
+  /** `t` with every field, nested ones included, nullable: the form Spark
+    * reads any file-source table in. Manifests record schemas in this
+    * form, so schemas that differ only in nullability compare equal. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The schema files written from `df` are read back with. */
+  private def schemaOf(df: DataFrame): StructType =
+    nullable(df.schema).asInstanceOf[StructType]
+
+  /** The schema `m` records for every file it lists; None on a manifest
+    * written before the field existed or after a schema-evolving append. */
+  private def schemaOf(m: Json.Manifest): Option[StructType] =
+    m.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** The schema a writer records when it adds files of schema `written`
+    * to `base`'s: the base's, when the new files have it; otherwise none,
+    * and readers of the new version infer as they do on a legacy table. */
+  private def carriedSchema(base: Json.Manifest, written: StructType): Option[StructType] =
+    schemaOf(base).filter(_ == written)
+
+  private def mergeSchemaOn(options: Map[String, String]): Boolean =
+    options.exists { case (k, v) =>
+      k.equalsIgnoreCase("mergeSchema") && v.equalsIgnoreCase("true") }
+
+  /** The schema a scan may declare instead of inferring one. Parquet
+    * footers carry Spark's own schema, so the recorded schema reads the
+    * same columns without the one-task footer job; CSV and JSON infer
+    * other types than they were written with, and a mergeSchema read must
+    * union every footer, so those still infer. */
+  private def declared(schema: Option[StructType], format: String,
+                       options: Map[String, String]): Option[StructType] =
+    schema.filter(_ => format == "parquet" && !mergeSchemaOn(options))
+
+  /** The one data-file reader in this file: `paths` as `format`, with the
+    * recorded `schema` declared where [[declared]] allows it. */
+  private def scan(spark: SparkSession, paths: Seq[String], schema: Option[StructType],
+                   format: String, options: Map[String, String]): DataFrame = {
+    val reader = spark.read.format(format).options(graft.sources.Sources.mapOptions(options))
+    declared(schema, format, options).fold(reader)(reader.schema).load(paths: _*)
+  }
+
+  /** What a write of `frame` changes against the table's `table` schema,
+    * as one message part; empty when nothing does. Columns compare by
+    * name; `types` also compares their data types, since a parquet column
+    * read at another type than it was written fails the whole read. */
+  private def drift(table: StructType, frame: StructType, types: Boolean): String = {
+    val (tableCols, newCols) = (table.fieldNames.toSet, frame.fieldNames.toSet)
+    val missing = (tableCols -- newCols).toSeq.sorted
+    val added = (newCols -- tableCols).toSeq.sorted
+    val changed =
+      if (!types) Nil
+      else table.fields.toSeq.flatMap(f => frame.find(_.name == f.name)
+        .map(_.dataType).filter(_ != f.dataType)
+        .map(t => s"${f.name} ${f.dataType.sql} -> ${t.sql}"))
+    Seq("missing" -> missing, "added" -> added, "changed" -> changed)
+      .collect { case (what, cols) if cols.nonEmpty => s"$what: ${cols.mkString(", ")}; " }
+      .mkString
+  }
+
   // ------------------------------------------------------- deletion vectors
 
   /** A version's deletion vector: the manifest's `dv_file`, a parquet
     * DIRECTORY under `_graft_log/` with columns `file: string, pos: long`
     * (`dv_rows` is its row count; both absent with no deletes). */
   private def readDv(spark: SparkSession, root: Path, name: String): DataFrame =
-    spark.read.parquet(new Path(logDir(root), name).toString)
+    spark.read.schema(DvSchema).parquet(new Path(logDir(root), name).toString)
+
+  /** The columns every deletion-vector writer produces. */
+  private val DvSchema = StructType.fromDDL("file STRING, pos BIGINT")
 
   /** `df` (which must carry parquet `_metadata`) with its row
     * positions exposed as `__dv_file` (file basename) / `__dv_pos`
@@ -406,15 +479,14 @@ object VersionedTable {
   }
 
   /** Compute per-file stats for `cols` over exactly `paths` (the NEW
-    * files of one commit). One scan of the new data; the collect is
-    * bounded by n_new_files × n_cols triples. */
-  private def computeStats(spark: SparkSession, paths: Seq[String],
+    * files of one commit, written with `schema`). One scan of the new
+    * data; the collect is bounded by n_new_files × n_cols triples. */
+  private def computeStats(spark: SparkSession, paths: Seq[String], schema: StructType,
                            cols: Seq[String], format: String,
                            options: Map[String, String]): SidecarStats = {
     import org.apache.spark.sql.functions._
     if (paths.isEmpty || cols.isEmpty) return SidecarStats.empty
-    val df = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options)).load(paths: _*)
+    val df = scan(spark, paths, Some(schema), format, options)
     val missing = cols.filterNot(df.columns.contains)
     if (missing.nonEmpty) throw new graft.config.ConfigError(
       s"versioned commit: stats columns ${missing.mkString(", ")} not in the " +
@@ -577,31 +649,26 @@ object VersionedTable {
     val fs = fsFor(spark, root)
     fs.mkdirs(dataDir(root))
     fs.mkdirs(logDir(root))
-    // appends must match the table's column set: the snapshot read loads
+    // appends must match the table's schema: the snapshot read loads
     // an explicit file list, so a silently drifted schema would surface
     // only at read time (missing/extra columns depending on which file
-    // the reader samples first). Evolution is opt-in: commit AND read
-    // with mergeSchema=true (one footer read — metadata, not data).
+    // the reader samples first; a changed type fails the read). The
+    // recorded schema answers by name and type; a legacy manifest costs
+    // one footer read and answers by name. Evolution is opt-in: commit
+    // AND read with mergeSchema=true.
     val manifest = manifestReader(fs, root)
-    if (mode == "append") {
+    val written = schemaOf(df)
+    if (mode == "append" && !mergeSchemaOn(options)) {
       versions(spark, location).lastOption.foreach { lv =>
-        val existing = manifest(lv).names
-        if (existing.nonEmpty &&
-          !options.get("mergeSchema").exists(_.equalsIgnoreCase("true"))) {
-          val tableCols = spark.read.format(format)
-            .options(graft.sources.Sources.mapOptions(options))
-            .load(new Path(dataDir(root), existing.head).toString)
-            .columns.toSet
-          val newCols = df.columns.toSet
-          if (tableCols != newCols) {
-            val missing = (tableCols -- newCols).toSeq.sorted
-            val added = (newCols -- tableCols).toSeq.sorted
-            throw new graft.config.ConfigError(
-              s"versioned commit: append schema drift at '$location' v$lv — " +
-                (if (missing.nonEmpty) s"missing: ${missing.mkString(", ")}; " else "") +
-                (if (added.nonEmpty) s"added: ${added.mkString(", ")}; " else "") +
-                "pass mergeSchema=true in options (commit AND read) to evolve")
-          }
+        val m = manifest(lv)
+        if (m.files.nonEmpty) {
+          val recorded = declared(schemaOf(m), format, options)
+          val table = recorded.getOrElse(
+            scan(spark, dataPaths(root, m.names.take(1)), None, format, options).schema)
+          val changes = drift(table, written, types = recorded.nonEmpty)
+          if (changes.nonEmpty) throw new graft.config.ConfigError(
+            s"versioned commit: append schema drift at '$location' v$lv — $changes" +
+              "pass mergeSchema=true in options (commit AND read) to evolve")
         }
       }
     }
@@ -627,7 +694,7 @@ object VersionedTable {
     // commit's data, never of the table
     val newStats: SidecarStats =
       if (statsColumns.isEmpty) SidecarStats.empty
-      else computeStats(spark, dataPaths(root, moved.map(_.name)),
+      else computeStats(spark, dataPaths(root, moved.map(_.name)), written,
         statsColumns, format, options)
     var attempt = 0
     while (attempt < maxRetries) {
@@ -654,7 +721,10 @@ object VersionedTable {
       // stays valid verbatim — carry the sidecar BY NAME (zero rewrite);
       // an overwrite replaces the file set and clears it
       val dvCarry = head.flatMap(_.dv)
-      if (writeManifestCas(fs, root, v, mode, base ++ moved, txn, statsFile, dvCarry)) return v
+      // an overwrite or a first commit records the frame's schema
+      val schema = head.fold(Option(written))(carriedSchema(_, written))
+      if (writeManifestCas(fs, root, v, mode, base ++ moved, schema, txn, statsFile,
+          dvCarry)) return v
       attempt += 1 // lost the race: re-read latest and rebase
     }
     throw new java.io.IOException(
@@ -679,9 +749,7 @@ object VersionedTable {
     if (m.files.isEmpty)
       throw new graft.config.ConfigError(
         s"versioned read: version $v of '$location' references no files")
-    val base = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options))
-      .load(dataPaths(root, m.names): _*)
+    val base = scan(spark, dataPaths(root, m.names), schemaOf(m), format, options)
     m.dv_file.fold(base)(applyDv(spark, root, base, _))
   }
 
@@ -821,17 +889,15 @@ object VersionedTable {
       else if (actions.matched.nonEmpty) touchedProbe
       else Nil // insert/BY SOURCE only: nothing rewrites in place
     val untouched = files.filterNot(touched.toSet)
-    // ONE footer read serves the conditional path's target-schema needs
-    // (star-action validation + the insert-only projection) — lazy so
-    // the row-replace path never pays it
-    lazy val tableSchema: org.apache.spark.sql.types.StructType = {
+    val recorded = declared(schemaOf(head), format, options)
+    // the target schema: the recorded one, or ONE footer read on a legacy
+    // manifest — lazy so a path that never needs it never pays for it
+    lazy val tableSchema: StructType = recorded.getOrElse {
       if (files.isEmpty) throw new graft.config.ConfigError(
         s"versioned merge: version $latest of '$location' references no data " +
           "files — conditional MERGE needs the target schema; seed the table " +
           "with a committed snapshot first")
-      spark.read.format(format)
-        .options(graft.sources.Sources.mapOptions(options))
-        .load(new Path(dataDir(root), files.head).toString).schema
+      scan(spark, dataPaths(root, files.take(1)), None, format, options).schema
     }
     // the conditional evaluator projects to the TARGET schema (star
     // actions validate the source carries every target column below),
@@ -855,23 +921,13 @@ object VersionedTable {
           "(MERGE does not apply schema evolution)")
     }
     // when nothing is touched, the unionByName that would otherwise
-    // catch a drifted arrival schema never runs — check it explicitly
-    // (one footer read), or v+1 would mix schemas across its files
-    if (!conditional && touched.isEmpty && files.nonEmpty &&
-      !options.get("mergeSchema").exists(_.equalsIgnoreCase("true"))) {
-      val tableCols = spark.read.format(format)
-        .options(graft.sources.Sources.mapOptions(options))
-        .load(new Path(dataDir(root), files.head).toString).columns.toSet
-      val newCols = arrivals.columns.toSet
-      if (tableCols != newCols) {
-        val missing = (tableCols -- newCols).toSeq.sorted
-        val added = (newCols -- tableCols).toSeq.sorted
-        throw new graft.config.ConfigError(
-          s"versioned merge: arrival schema drift at '$location' v$latest — " +
-            (if (missing.nonEmpty) s"missing: ${missing.mkString(", ")}; " else "") +
-            (if (added.nonEmpty) s"added: ${added.mkString(", ")}; " else "") +
-            "pass mergeSchema=true in options (commit AND read) to evolve")
-      }
+    // catch a drifted arrival column set never runs — check it
+    // explicitly, or v+1 would mix schemas across its files
+    if (!conditional && touched.isEmpty && files.nonEmpty && !mergeSchemaOn(options)) {
+      val changes = drift(tableSchema, schemaOf(arrivals), types = false)
+      if (changes.nonEmpty) throw new graft.config.ConfigError(
+        s"versioned merge: arrival schema drift at '$location' v$latest — $changes" +
+          "pass mergeSchema=true in options (commit AND read) to evolve")
     }
     val latestDv = head.dv
     // live rows of the named files (a touched file's deleted rows must
@@ -882,9 +938,7 @@ object VersionedTable {
     // zone-miss file's rows from the rewrite); the no-matched-action
     // anti-join reads the probe set alone.
     def liveOf(names: Seq[String]): DataFrame = {
-      val base = spark.read.format(format)
-        .options(graft.sources.Sources.mapOptions(options))
-        .load(dataPaths(root, names): _*)
+      val base = scan(spark, dataPaths(root, names), recorded, format, options)
       latestDv.fold(base) { case (name, _) =>
         applyDv(spark, root, base, name) }
     }
@@ -926,9 +980,7 @@ object VersionedTable {
     val bySourceClaimed: Option[(DataFrame, Long)] =
       if (!bySourceViaDv || untouched.isEmpty) None
       else {
-        val base = spark.read.format(format)
-          .options(graft.sources.Sources.mapOptions(options))
-          .load(dataPaths(root, untouched): _*)
+        val base = scan(spark, dataPaths(root, untouched), recorded, format, options)
         val live = livePositions(spark, root, base, latestDv.map(_._1))
         // zone-miss files cannot hold an arrival key, but carried
         // zone-HIT files (no matched actions) can — those matched rows
@@ -950,12 +1002,13 @@ object VersionedTable {
           Some(MergeActions.bySourceImages(claimed, tableSchema, actions))
         else None
     }
-    val publishFrame = bySourceReimages.fold(merged)(merged.unionByName(_))
-    val (commitId, moved) = stageAndMove(fs, root, publishTransform(publishFrame),
-      format, options)
+    val publishFrame = publishTransform(
+      bySourceReimages.fold(merged)(merged.unionByName(_)))
+    val (commitId, moved) = stageAndMove(fs, root, publishFrame, format, options)
+    val written = schemaOf(publishFrame)
     val newStats =
       if (statsColumns.isEmpty) SidecarStats.empty
-      else computeStats(spark, dataPaths(root, moved.map(_.name)),
+      else computeStats(spark, dataPaths(root, moved.map(_.name)), written,
         statsColumns, format, options)
     val carriedNames = untouched.toSet
     val statsFile = statsFileFor(fs, root, commitId,
@@ -992,8 +1045,8 @@ object VersionedTable {
     // serializable: exactly one CAS attempt at latest+1 — losing means a
     // concurrent commit landed since our snapshot, and our merged frame
     // is stale (it would silently drop that writer's rows)
-    if (!writeManifestCas(fs, root, latest + 1, "merge",
-      untouchedEntries ++ moved, None, statsFile, dvNext))
+    if (!writeManifestCas(fs, root, latest + 1, "merge", untouchedEntries ++ moved,
+      carriedSchema(head, written), None, statsFile, dvNext))
       throw new java.util.ConcurrentModificationException(
         s"versioned merge: serializable conflict at '$location' — snapshot " +
           s"was v$latest; a concurrent commit won v${latest + 1}; re-read and re-merge")
@@ -1047,9 +1100,7 @@ object VersionedTable {
     }
     val head = manifestOf(fs, root, latest)
     val dvPrev = head.dv
-    val base = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options))
-      .load(dataPaths(root, head.names): _*)
+    val base = scan(spark, dataPaths(root, head.names), schemaOf(head), format, options)
     // only LIVE rows can match (a row deleted twice would double-count)
     val live = livePositions(spark, root, base, dvPrev.map(_._1))
     // PINNED once (localCheckpoint, eager): the matched set feeds both
@@ -1073,8 +1124,8 @@ object VersionedTable {
     newDv.write.mode(SaveMode.Overwrite)
       .parquet(new Path(logDir(root), dvName).toString)
     val dvRows = dvPrev.fold(0L)(_._2) + nMatched
-    if (!writeManifestCas(fs, root, latest + 1, "delete", head.files, None,
-      head.stats_file, Some((dvName, dvRows))))
+    if (!writeManifestCas(fs, root, latest + 1, "delete", head.files, schemaOf(head),
+      None, head.stats_file, Some((dvName, dvRows))))
       throw new java.util.ConcurrentModificationException(
         s"versioned delete: serializable conflict at '$location' — snapshot " +
           s"was v$latest; a concurrent commit won v${latest + 1}; re-delete")
@@ -1116,9 +1167,7 @@ object VersionedTable {
     }
     val head = manifestOf(fs, root, latest)
     val dvPrev = head.dv
-    val base = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options))
-      .load(dataPaths(root, head.names): _*)
+    val base = scan(spark, dataPaths(root, head.names), schemaOf(head), format, options)
     val live = livePositions(spark, root, base, dvPrev.map(_._1))
     val dataCols = base.columns.filterNot(Set("__dv_file", "__dv_pos")).toSeq
     set.keys.foreach { c =>
@@ -1139,9 +1188,10 @@ object VersionedTable {
         "location" -> location, "version" -> s"v$latest")
       return latest
     }
-    // the updated images: SET expressions evaluate against the OLD row
+    // the updated images: SET expressions evaluate against the OLD row,
+    // and keep the column's metadata so the new files match the old
     val updated = matched.select(dataCols.map { c =>
-      set.get(c).map(e => expr(e).as(c)).getOrElse(col(c))
+      set.get(c).map(e => expr(e).as(c, base.schema(c).metadata)).getOrElse(col(c))
     }: _*)
     // TYPE-PRESERVING contract: a SET expression that silently changes
     // the column's type would publish mixed-schema files the snapshot
@@ -1168,13 +1218,14 @@ object VersionedTable {
     // old files); the NEW files get fresh stats for the tracked columns
     val carried = sidecarOf(fs, root, head)
     val tracked = trackedColumns(carried)
+    val written = schemaOf(updated)
     val fresh =
       if (tracked.isEmpty) SidecarStats.empty
-      else computeStats(spark, dataPaths(root, moved.map(_.name)),
+      else computeStats(spark, dataPaths(root, moved.map(_.name)), written,
         tracked, format, options)
     val statsFile = statsFileFor(fs, root, commitId, carried ++ fresh)
-    if (!writeManifestCas(fs, root, latest + 1, "update", head.files ++ moved, None,
-      statsFile, Some((dvName, dvRows))))
+    if (!writeManifestCas(fs, root, latest + 1, "update", head.files ++ moved,
+      carriedSchema(head, written), None, statsFile, Some((dvName, dvRows))))
       throw new java.util.ConcurrentModificationException(
         s"versioned update: serializable conflict at '$location' — snapshot " +
           s"was v$latest; a concurrent commit won v${latest + 1}; re-update")
@@ -1245,9 +1296,7 @@ object VersionedTable {
       files.contains(f) && !knownRows.contains(f)).toSeq
     val countedRows: Map[String, Long] =
       if (uncounted.isEmpty) Map.empty
-      else spark.read.format(format)
-        .options(graft.sources.Sources.mapOptions(options))
-        .load(dataPaths(root, uncounted): _*)
+      else scan(spark, dataPaths(root, uncounted), schemaOf(head), format, options)
         .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1).as("f"))
         .agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -1259,9 +1308,7 @@ object VersionedTable {
     }
     if (rewrite.isEmpty) return (latest, 0)
     val carried = files.filterNot(rewrite.toSet)
-    val liveBase = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options))
-      .load(dataPaths(root, rewrite): _*)
+    val liveBase = scan(spark, dataPaths(root, rewrite), schemaOf(head), format, options)
     val live = applyDv(spark, root, liveBase, dvPrev._1)
     val (commitId, moved) = stageAndMove(fs, root, live, format, options)
     // DV: drop entries for the rewritten files, keep the rest
@@ -1278,15 +1325,17 @@ object VersionedTable {
       }
     // stats: carry for untouched files; fresh for the rewritten output
     val tracked = trackedColumns(sidecar)
+    val written = schemaOf(live)
     val fresh =
       if (tracked.isEmpty) SidecarStats.empty
-      else computeStats(spark, dataPaths(root, moved.map(_.name)),
+      else computeStats(spark, dataPaths(root, moved.map(_.name)), written,
         tracked, format, options)
     val carriedNames = carried.toSet
     val statsFile = statsFileFor(fs, root, commitId,
       sidecar.filterFiles(carriedNames) ++ fresh)
     if (!writeManifestCas(fs, root, latest + 1, "compact_deletes",
-      head.files.filter(f => carriedNames(f.name)) ++ moved, None, statsFile, dvNext))
+      head.files.filter(f => carriedNames(f.name)) ++ moved, carriedSchema(head, written),
+      None, statsFile, dvNext))
       throw new java.util.ConcurrentModificationException(
         s"versioned compactDeletes: serializable conflict at '$location' — " +
           s"a concurrent commit won v${latest + 1}; re-run")
@@ -1378,13 +1427,15 @@ object VersionedTable {
       }
     }
     val (commitId, moved) = stageAndMove(fs, root, df, format, options)
+    val written = schemaOf(df)
     var attempt = 0
     while (attempt < maxRetries) {
       val head = branchVersions(spark, location, branch).last
       // an append carries the head's files, stats and DV by name
       val carry = if (mode == "append") Some(manifest(head)) else None
       if (writeManifestCas(fs, root, head + 1, mode,
-        carry.fold(Seq.empty[Json.FileEntry])(_.files) ++ moved, txn,
+        carry.fold(Seq.empty[Json.FileEntry])(_.files) ++ moved,
+        carry.fold(Option(written))(carriedSchema(_, written)), txn,
         carry.flatMap(_.stats_file), carry.flatMap(_.dv), Some(branch))) {
         graft.log.Log.info("versioned branch commit",
           "location" -> location, "branch" -> branch, "version" -> s"v${head + 1}")
@@ -1412,9 +1463,7 @@ object VersionedTable {
     val m = manifestAt(fs, branchManifestPath(root, v, branch))
     if (m.files.isEmpty) throw new graft.config.ConfigError(
       s"versioned branch read: v$v@$branch of '$location' references no files")
-    val base = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options))
-      .load(dataPaths(root, m.names): _*)
+    val base = scan(spark, dataPaths(root, m.names), schemaOf(m), format, options)
     m.dv_file.fold(base)(applyDv(spark, root, base, _))
   }
 
@@ -1440,8 +1489,8 @@ object VersionedTable {
           s"'$branch' forked at v$forkBase but main is at v$mainLatest; " +
           "rebaseBranch (append-only staging) or re-fork and re-stage")
     val head = manifestAt(fs, branchManifestPath(root, bvs.last, branch))
-    if (!writeManifestCas(fs, root, forkBase + 1, "publish", head.files, None,
-      head.stats_file, head.dv))
+    if (!writeManifestCas(fs, root, forkBase + 1, "publish", head.files, schemaOf(head),
+      None, head.stats_file, head.dv))
       throw new java.util.ConcurrentModificationException(
         s"versioned publish: serializable conflict at '$location' — a " +
           s"concurrent commit won v${forkBase + 1}; re-fork and re-stage")
@@ -1495,8 +1544,10 @@ object VersionedTable {
     val tmpBranch = s"$branch.rebase-$uuid"
     writeRawManifest(fs, root, branchManifestPath(root, mainLatest, tmpBranch),
       Json.write(mainHead.copy(mode = "branch")))
-    if (!writeManifestCas(fs, root, mainLatest + 1, "append",
-      mainHead.files ++ staged, None, mainHead.stats_file, mainHead.dv, Some(tmpBranch)))
+    // the staged files have the branch head's schema
+    val schema = schemaOf(lineage.last).flatMap(carriedSchema(mainHead, _))
+    if (!writeManifestCas(fs, root, mainLatest + 1, "append", mainHead.files ++ staged,
+      schema, None, mainHead.stats_file, mainHead.dv, Some(tmpBranch)))
       throw new java.util.ConcurrentModificationException(
         s"versioned rebase: branch '$branch' raced at '$location'")
     // COMMIT MARKER: from this instant the rebase is DECIDED — a crash
@@ -1671,9 +1722,7 @@ object VersionedTable {
         // table's schema, zero files opened
         read(spark, location, Some(v), format, options).limit(0)
       else {
-        val base = spark.read.format(format)
-          .options(graft.sources.Sources.mapOptions(options))
-          .load(dataPaths(root, kept): _*)
+        val base = scan(spark, dataPaths(root, kept), schemaOf(m), format, options)
         // deleted rows stay invisible on the pruned path too (DV entries
         // for pruned-away files anti-join to nothing, harmlessly)
         m.dv_file.fold(base)(applyDv(spark, root, base, _))
@@ -1741,9 +1790,7 @@ object VersionedTable {
       if (added.isEmpty)
         read(spark, location, Some(v), format, options).limit(0)
           .withColumn("_commit_version", lit(v))
-      else spark.read.format(format)
-        .options(graft.sources.Sources.mapOptions(options))
-        .load(dataPaths(root, added): _*)
+      else scan(spark, dataPaths(root, added), schemaOf(manifest(v)), format, options)
         .withColumn("_commit_version", lit(v))
     }
     frames.reduceLeft(_.unionByName(_))
@@ -1779,8 +1826,8 @@ object VersionedTable {
       return latest
     }
     val target = manifestOf(fs, root, toVersion)
-    if (!writeManifestCas(fs, root, latest + 1, "restore", target.files, None,
-      target.stats_file, target.dv))
+    if (!writeManifestCas(fs, root, latest + 1, "restore", target.files,
+      schemaOf(target), None, target.stats_file, target.dv))
       throw new java.util.ConcurrentModificationException(
         s"versioned restore: serializable conflict at '$location' — a " +
           s"concurrent commit won v${latest + 1}; re-inspect and re-restore")

@@ -95,7 +95,10 @@ object Json {
     * version plus its commit metadata. `ts` is absent from manifests
     * written before wall-clock time travel; `txn_*` only on streaming
     * commits; `stats_file` names the zone-map sidecar and `dv_file` the
-    * deletion-vector directory, both under `_graft_log/`. */
+    * deletion-vector directory, both under `_graft_log/`. `schema` is
+    * Spark's StructType JSON of every listed file (Delta's
+    * `schemaString`); absent from manifests written before it existed and
+    * after an append that evolved the schema. */
   final case class Manifest(version: Long, ts: Option[Long],
                             mode: String = "overwrite",
                             txn_app: Option[String] = None,
@@ -103,7 +106,8 @@ object Json {
                             stats_file: Option[String] = None,
                             dv_file: Option[String] = None,
                             dv_rows: Option[Long] = None,
-                            n_files: Long, files: Seq[FileEntry]) {
+                            n_files: Long, files: Seq[FileEntry],
+                            schema: Option[String] = None) {
     def names: Seq[String] = files.map(_.name)
     def dv: Option[(String, Long)] = dv_file.map((_, dv_rows.getOrElse(0L)))
   }

@@ -11,6 +11,41 @@ class VersionedTableSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Int, String)] =
     df.collect().map(r => (r.getAs[Int]("k"), r.getAs[String]("v"))).toSet
 
+  private def manifestPath(loc: String, v: Long, branch: String = "") =
+    new org.apache.hadoop.fs.Path(s"$loc/_graft_log/" +
+      (if (branch.isEmpty) f"v$v%05d.json" else f"v$v%05d@$branch.json"))
+
+  private def manifest(loc: String, v: Long, branch: String = ""): graft.util.Json.Manifest = {
+    val p = manifestPath(loc, v, branch)
+    graft.util.Json.load[graft.util.Json.Manifest](
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** The data files version `v` lists. */
+  private def files(loc: String, v: Long, branch: String = ""): Seq[String] =
+    manifest(loc, v, branch).names.map(n => s"$loc/data/$n")
+
+  /** `body`'s result and the number of Spark jobs it launched: a
+    * listener counts the job starts that carry a job group unique to
+    * this call, so jobs another test left running never count. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      org.apache.spark.ListenerBus.drain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("commit/read roundtrip: overwrite snapshots, append accumulates") {
     val loc = tmp("t1")
     val v1 = VersionedTable.commit(spark, loc, Seq((1, "a")).toDF("k", "v"), "overwrite")
@@ -283,6 +318,25 @@ class VersionedTableSpec extends SparkSpec {
       .collect().map(r => (r.getAs[Int]("k"),
         Option(r.getAs[Any]("extra")).map(_.toString.toLong))).toSet
     assert(got == Set((1, None), (2, Some(7L)))) // old rows null-padded
+    // the evolved version records no schema, so its reads infer
+    assert(manifest(loc, 2L).schema.isEmpty)
+    assert(VersionedTable.read(spark, loc, options = ms).schema ==
+      spark.read.options(ms).parquet(files(loc, 2L): _*).schema)
+  }
+
+  test("append that changes a column's type fails loudly; nullability is no drift") {
+    val loc = tmp("ev2")
+    VersionedTable.commit(spark, loc, Seq((1L, "a")).toDF("k", "v"), "overwrite")
+    val e = intercept[graft.config.ConfigError](
+      VersionedTable.commit(spark, loc, Seq(("2", "b")).toDF("k", "v"), "append"))
+    assert(e.getMessage.contains("schema drift") &&
+      e.getMessage.contains("changed: k BIGINT -> STRING"), e.getMessage)
+    assert(VersionedTable.versions(spark, loc) == Seq(1L))
+    // a nullable k where v1 wrote a non-nullable one is the same schema
+    VersionedTable.commit(spark, loc, Seq((Option(2L), "b")).toDF("k", "v"), "append")
+    assert(manifest(loc, 2L).schema == manifest(loc, 1L).schema)
+    assert(VersionedTable.read(spark, loc).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet == Set((1L, "a"), (2L, "b")))
   }
 
   test("bucket bitmaps skip = probes the range alone cannot") {
@@ -1261,5 +1315,139 @@ class VersionedTableSpec extends SparkSpec {
     assert(kept(VersionedTable.Prune("k", "<", Long.MaxValue)) == Seq(Long.MaxValue - 1))
     assert(kept(VersionedTable.Prune("d", ">", dLo.bigDecimal)) == Seq(Long.MaxValue))
     assert(kept(VersionedTable.Prune("d", "<=", dLo.bigDecimal)) == Seq(Long.MaxValue - 1))
+  }
+
+  test("reads, deletes and merges launch no schema-inference jobs") {
+    val loc = tmp("jobs")
+    VersionedTable.commit(spark, loc, (1 to 40).map(k => (k, s"v$k")).toDF("k", "v")
+      .repartition(4), "overwrite", statsColumns = Seq("k"))
+    // building a read plans only: the manifest's schema replaces the
+    // footer job, and the deletion vector has a fixed schema
+    assert(jobsOf(VersionedTable.read(spark, loc))._2 == 0)
+    // pin the matched positions, count them (a map and a result job),
+    // write the deletion vector: no job reads a footer
+    assert(jobsOf(VersionedTable.deleteWhere(spark, loc, "k % 7 = 0"))._2 == 4)
+    assert(jobsOf(VersionedTable.read(spark, loc))._2 == 0)
+    // key bounds, merged write, new files' stats, carried deletion
+    // vector's count and rewrite: no job reads a footer
+    val (v, jobs) = jobsOf(VersionedTable.merge(spark, loc,
+      Seq((3, "x"), (41, "y")).toDF("k", "v"), Seq("k"), statsColumns = Seq("k")))
+    assert(jobs == 8)
+    assert(rows(VersionedTable.read(spark, loc, asOf = Some(v))) ==
+      (1 to 41).filter(_ % 7 != 0).map(k => (k, k match {
+        case 3 => "x"; case 41 => "y"; case _ => s"v$k" })).toSet)
+  }
+
+  test("every manifest writer records the schema its files are read with") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val loc = tmp("fidelity")
+    val note = new MetadataBuilder().putString("comment", "free text").build()
+    val schema = StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("amount", DecimalType(38, 18)),
+      StructField("at", TimestampType),
+      StructField("local_at", TimestampNTZType),
+      StructField("day", DateType),
+      StructField("blob", BinaryType),
+      StructField("items", ArrayType(StructType(Seq(
+        StructField("sku", StringType), StructField("qty", IntegerType))))),
+      StructField("tags", MapType(StringType, LongType)),
+      StructField("dims", StructType(Seq(
+        StructField("w", IntegerType, nullable = false), StructField("h", DoubleType)))),
+      StructField("note", StringType, nullable = true, note)))
+    def row(k: Long, text: String): Row = Row(k,
+      new java.math.BigDecimal(s"12345678901234567890.$k").setScale(18),
+      java.sql.Timestamp.valueOf(s"2024-01-0${k % 9 + 1} 12:34:56.123456"),
+      java.time.LocalDateTime.of(2024, 2, 1, 0, 0).plusSeconds(k),
+      java.sql.Date.valueOf(s"2024-03-0${k % 9 + 1}"),
+      Array[Byte](k.toByte, 0, -1),
+      Seq(Row(s"sku$k", k.toInt), Row(null, null)),
+      Map(s"t$k" -> k),
+      Row(k.toInt, k / 2.0),
+      text)
+    def frame(rs: Seq[Row]) = spark.createDataFrame(
+      java.util.Arrays.asList(rs: _*), schema).coalesce(1)
+    var model = Map.empty[Long, Row]
+    def sorted(rs: Iterable[Row]) = rs.toSeq.sortBy(_.getLong(0))
+    // the schema is recorded, the versioned read declares it, and it
+    // equals what Spark infers from that version's files; rows match
+    def check(v: Long, branch: String = ""): Unit = {
+      assert(manifest(loc, v, branch).schema.isDefined, s"v$v@$branch records no schema")
+      val got =
+        if (branch.isEmpty) VersionedTable.read(spark, loc, asOf = Some(v))
+        else VersionedTable.readBranch(spark, loc, branch, asOf = Some(v))
+      assert(got.schema == spark.read.parquet(files(loc, v, branch): _*).schema, s"v$v@$branch")
+      assert(got.schema("note").metadata == note)
+      assert(sorted(got.collect()) == sorted(model.values), s"v$v@$branch")
+    }
+    def put(rs: Row*): Unit = model ++= rs.map(r => r.getLong(0) -> r)
+
+    put((1L to 4L).map(row(_, "base")): _*)
+    check(VersionedTable.commit(spark, loc, frame(model.values.toSeq), "overwrite",
+      statsColumns = Seq("k")))
+    put(row(5, "appended"), row(6, "appended"))
+    check(VersionedTable.commit(spark, loc, frame(Seq(row(5, "appended"), row(6, "appended"))),
+      "append", statsColumns = Seq("k")))
+    put(row(6, "merged"), row(7, "merged"))
+    check(VersionedTable.merge(spark, loc, frame(Seq(row(6, "merged"), row(7, "merged"))),
+      Seq("k"), statsColumns = Seq("k")))
+    model -= 2L
+    check(VersionedTable.deleteWhere(spark, loc, "k = 2"))
+    put(row(3, "updated"))
+    check(VersionedTable.updateWhere(spark, loc, "k = 3", Map("note" -> "'updated'")))
+    val (compacted, rewritten) = VersionedTable.compactDeletes(spark, loc, 0.01)
+    assert(rewritten > 0)
+    check(compacted)
+    // the streaming incremental sink's commit: an append with a txn
+    put(row(8, "streamed"))
+    check(VersionedTable.commit(spark, loc, frame(Seq(row(8, "streamed"))), "append",
+      txn = Some(("ckpt", 0L))))
+    model = (1L to 6L).map(k => k -> row(k, if (k > 4) "appended" else "base")).toMap
+    check(VersionedTable.restore(spark, loc, 2L))
+    check(VersionedTable.createBranch(spark, loc, "audit"), "audit")
+    val staged = row(9, "staged")
+    put(staged)
+    check(VersionedTable.branchCommit(spark, loc, "audit", frame(Seq(staged)), "append"),
+      "audit")
+    // main moves on; the rebased branch forks at main's head and appends
+    // its staged rows again
+    model -= 9L
+    put(row(10, "main"))
+    check(VersionedTable.commit(spark, loc, frame(Seq(row(10, "main"))), "append"))
+    val fork = VersionedTable.rebaseBranch(spark, loc, "audit")
+    check(fork, "audit")
+    put(staged)
+    check(fork + 1, "audit")
+    check(VersionedTable.publishBranch(spark, loc, "audit"))
+    // a legacy manifest without the field reads the same rows and schema
+    val latest = VersionedTable.versions(spark, loc).last
+    val before = VersionedTable.read(spark, loc)
+    val p = manifestPath(loc, latest)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.util.Json.writeFile(fs, p,
+      graft.util.Json.write(manifest(loc, latest).copy(schema = None)))
+    val legacy = VersionedTable.read(spark, loc)
+    assert(legacy.schema == before.schema)
+    assert(sorted(legacy.collect()) == sorted(before.collect()))
+    // ... and the next append through it infers its base again
+    put(row(11, "after legacy"))
+    val v = VersionedTable.commit(spark, loc, frame(Seq(row(11, "after legacy"))), "append")
+    assert(manifest(loc, v).schema.isEmpty)
+    assert(sorted(VersionedTable.read(spark, loc).collect()) == sorted(model.values))
+  }
+
+  test("a CSV versioned table still infers its read schema") {
+    val loc = tmp("csv")
+    val opts = Map("header" -> "true")
+    VersionedTable.commit(spark, loc, Seq((1, "a"), (2, "b")).toDF("k", "v"), "overwrite",
+      format = "csv", options = opts)
+    assert(manifest(loc, 1L).schema.isDefined)
+    val got = VersionedTable.read(spark, loc, format = "csv", options = opts)
+    // CSV reads back strings, not the INT the frame was written with
+    assert(got.schema == spark.read.options(opts).csv(files(loc, 1L): _*).schema)
+    assert(got.schema("k").dataType == org.apache.spark.sql.types.StringType)
+    assert(got.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
+      Set(("1", "a"), ("2", "b")))
   }
 }

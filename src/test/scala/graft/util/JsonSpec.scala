@@ -54,8 +54,9 @@ class JsonSpec extends SparkSpec {
       v <- long; ts <- Gen.option(long); mode <- text
       app <- Gen.option(text); batch <- Gen.option(long)
       stats <- Gen.option(text); dv <- Gen.option(text); dvRows <- Gen.option(long)
-      fs <- files
-    } yield Json.Manifest(v, ts, mode, app, batch, stats, dv, dvRows, fs.size.toLong, fs)
+      fs <- files; schema <- Gen.option(text)
+    } yield Json.Manifest(v, ts, mode, app, batch, stats, dv, dvRows, fs.size.toLong, fs,
+      schema)
     roundTrips(manifest)(m => (m.version + 1L, m.ts.map(_ + 1L),
       m.txn_batch.map(_ + 1L), m.dv_rows.map(_ + 1L), m.n_files + 1L,
       m.files.map(_.bytes + 1L)))

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # One-command local replica of the driver's correctness gate:
-#   the benchmark's and gate_check's own Python unit tests
+#   the Python unit tests of the benchmark, gate_check and perfbench_ab
 #   -> sbt Verify (every SparkEntry query, end-to-end) at sf0.01
 #   -> tools/oracle_check.py   (DuckDB value/schema/rowcount compare)
 #   -> tools/hugeint_audit.py  (oracle output-type sweep: no HUGEINT/
@@ -20,6 +20,7 @@ ONLY="${3:-}"
 
 python3 -m unittest discover -s perfbench -p 'test_*.py'
 python3 tools/test_gate_check.py
+python3 tools/test_perfbench_ab.py
 
 rm -rf "$OUT_DIR"
 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR $ONLY" 2>&1 \
